@@ -16,7 +16,7 @@ Usage:
       [--t1 3.0 --t2 1.5]
   ... fuzzykmeans --input ... -k 5 [-m 2.0]
   ... canopy --input ... --t1 3.0 --t2 1.5
-  ... streamingkmeans --input ... -k 5 [--sketch-size 100]
+  ... streamingkmeans --input ... -k 5 [--final-iterations 20]
 
 Input: parquet with (vec_id, embedding array<double>) — override with
 --id-col/--vec-col. Output directory gets model.json (centers +

@@ -302,6 +302,81 @@ class StreamingKMeansSketch:
         return np.stack(self.centers), np.asarray(self.weights)
 
 
+def estimate_distance_cutoff(sample: np.ndarray) -> float:
+    """estimateDistanceCutoff analog: the mean nearest-neighbour distance
+
+    over a small point sample (1.0 for fewer than two points, or when
+    every sampled point coincides)."""
+    if len(sample) < 2:
+        return 1.0
+    d2 = ((sample[:, None, :] - sample[None, :, :]) ** 2).sum(axis=2)
+    np.fill_diagonal(d2, np.inf)
+    return float(np.sqrt(d2.min(axis=1)).mean()) or 1.0
+
+
+#: independent k-means++ seedings per finish; the lowest weighted cost
+#: wins (BallKMeans numRuns semantics)
+FINISH_RUNS = 4
+
+
+def _kmeanspp_seeds(cents: np.ndarray, wts: np.ndarray, k: int,
+                    seed: int, run: int) -> np.ndarray:
+    """Weighted k-means++ seeding — BallKMeans kMeansPlusPlusInit
+
+    (Arthur & Vassilvitskii 2007): the first seed is drawn with
+    probability proportional to weight, each further one proportional to
+    weight x squared distance to the nearest seed so far. Draw ``i`` of
+    ``run`` is the hash coin ``_coin(run * k + i, seed)``, so every call
+    and every retry picks the same rows."""
+    d2 = np.full(len(cents), np.inf)
+    p = wts
+    seeds = []
+    for i in range(k):
+        cdf = np.cumsum(p)
+        u = StreamingKMeansSketch._coin(run * k + i, seed) * cdf[-1]
+        j = min(int(np.searchsorted(cdf, u, side="right")), len(cents) - 1)
+        seeds.append(cents[j])
+        d2 = np.minimum(d2, ((cents - cents[j]) ** 2).sum(axis=1))
+        # every row on a seed already (< k distinct rows): any row will do
+        p = wts * d2 if (wts * d2).sum() > 0 else wts
+    return np.stack(seeds)
+
+
+def weighted_kmeans_finish(cents: np.ndarray, wts: np.ndarray, k: int,
+                           seed: int = 31, max_iterations: int = 20
+                           ) -> tuple[np.ndarray, int, bool]:
+    """(centers, iterations, converged) — the reducer-side BallKMeans role
+
+    over merged sketch rows: ``FINISH_RUNS`` k-means++ seedings, each
+    refined by weighted Lloyd's iterations until the centers stop moving
+    (``np.allclose``) or ``max_iterations`` pass; the run with the lowest
+    weighted cost sum(w * d2) over the rows is kept (first run on ties).
+    Spark-free and deterministic in (rows, weights, k, seed). A cluster
+    that loses all its rows keeps its center."""
+    best = None
+    for run in range(FINISH_RUNS):
+        centers = _kmeanspp_seeds(cents, wts, k, seed, run)
+        converged = False
+        it = 0
+        for it in range(1, max_iterations + 1):
+            d2 = ((cents[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+            lab = d2.argmin(axis=1)
+            new = centers.copy()
+            for j in range(k):
+                m = lab == j
+                if m.any():
+                    new[j] = np.average(cents[m], axis=0, weights=wts[m])
+            converged = bool(np.allclose(new, centers))
+            centers = new
+            if converged:
+                break
+        d2 = ((cents[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+        cost = float((wts * d2.min(axis=1)).sum())
+        if best is None or cost < best[0]:
+            best = (cost, centers, it, converged)
+    return best[1], best[2], best[3]
+
+
 def streaming_kmeans(points: DataFrame, k: int,
                      distance_cutoff: float | None = None,
                      beta: float = 1.3, overshoot: float = 2.0,
@@ -311,28 +386,26 @@ def streaming_kmeans(points: DataFrame, k: int,
     """One-pass distributed clustering: every partition reduces its rows
 
     to a StreamingKMeansSketch (mapInPandas), the per-partition weighted
-    centroids union into one small frame, and a weighted Lloyd's finish
-    (the reference's reducer-side BallKMeans role) produces the final k
-    centers — total shuffle volume is ~n_partitions * k * log(n) rows
-    regardless of corpus size, the streaming analog of the CMS builds.
-    ``distance_cutoff`` defaults to a hash-sample-based estimate.
+    centroids union into one small frame, and a k-means++-seeded
+    weighted Lloyd's finish (``weighted_kmeans_finish``: the reference's
+    reducer-side BallKMeans role, best of ``FINISH_RUNS`` seedings drawn
+    from hash coins) produces the final k centers — total shuffle volume
+    is ~n_partitions * k * log(n) rows regardless of corpus size, the
+    streaming analog of the CMS builds. The k-means++ seeding weighs
+    rows by mass and spread, so which sketch row sits at which index
+    (set by the partition layout) no longer decides whether a blob gets
+    a seed. ``distance_cutoff`` defaults to a hash-sample-based estimate.
     """
     import pandas as pd
 
     pts = points.select(F.col(id_col).alias("__id"),
                         F.col(vec_col).cast("array<double>").alias("__v"))
     if distance_cutoff is None:
-        # estimateDistanceCutoff analog: mean NN-distance over a small
-        # deterministic hash sample
+        # over a small deterministic hash sample
         sample = (pts.orderBy(F.xxhash64("__id", F.lit(seed)))
                   .limit(256).collect())
-        sp = np.array([r["__v"] for r in sample])
-        if len(sp) > 1:
-            d2 = ((sp[:, None, :] - sp[None, :, :]) ** 2).sum(axis=2)
-            np.fill_diagonal(d2, np.inf)
-            distance_cutoff = float(np.sqrt(d2.min(axis=1)).mean()) or 1.0
-        else:
-            distance_cutoff = 1.0
+        distance_cutoff = estimate_distance_cutoff(
+            np.array([r["__v"] for r in sample]))
 
     out_schema = "center array<double>, weight double"
 
@@ -357,26 +430,8 @@ def streaming_kmeans(points: DataFrame, k: int,
             f"streaming_kmeans: the centroid sketch holds {len(cents)} "
             f"weighted centroids, fewer than k={k} — the input is too "
             f"small (or distance_cutoff too large) for k clusters")
-    # weighted Lloyd's finish over the (small) centroid sketch — the
-    # BallKMeans reducer role, deterministic seeding by hash order
-    order = np.argsort([StreamingKMeansSketch._coin(j, seed)
-                        for j in range(len(cents))])
-    centers = cents[order[:k]].copy()
-    converged = False
-    it = 0
-    for it in range(1, final_iterations + 1):
-        d2 = ((cents[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-        lab = d2.argmin(axis=1)
-        new = centers.copy()
-        for j in range(k):
-            m = lab == j
-            if m.any():
-                new[j] = np.average(cents[m], axis=0, weights=wts[m])
-        if np.allclose(new, centers):
-            centers = new
-            converged = True
-            break
-        centers = new
+    centers, it, converged = weighted_kmeans_finish(cents, wts, k, seed,
+                                                    final_iterations)
     model = KMeansModel(centers, it, converged, 0.0)
     cost = (_assign_frame(pts, centers, "__id", "__v")
             .agg(F.sum("dist2")).first()[0])

@@ -164,6 +164,48 @@ class TestStreamingKMeans:
         assert model.centers.shape == (3, 3)
         assert model.iterations >= 1  # real loop metadata, not hardcoded
 
+    @pytest.mark.parametrize("layout", ["contiguous", "round_robin"])
+    @pytest.mark.parametrize("n_parts", [2, 4, 8])
+    def test_finish_recovers_blobs_for_any_partition_layout(
+            self, blobs, n_parts, layout):
+        # the streaming_kmeans pipeline without Spark: one sketch per
+        # partition, the reducer sees their weighted centroids
+        # concatenated; the finish must find every blob whichever
+        # partition holds which point
+        from mahout_spark.operators.clustering import (
+            StreamingKMeansSketch, estimate_distance_cutoff,
+            weighted_kmeans_finish)
+
+        _, pts = blobs
+        ids = np.arange(len(pts))
+        parts = (np.array_split(ids, n_parts) if layout == "contiguous"
+                 else [ids[i::n_parts] for i in range(n_parts)])
+        cutoff = estimate_distance_cutoff(pts)
+        cents, wts = [], []
+        for part in parts:
+            sk = StreamingKMeansSketch(3, cutoff, seed=13)
+            sk.update_batch(pts[part], part)
+            c, w = sk.weighted_centroids()
+            cents.append(c)
+            wts.append(w)
+        cents, wts = np.concatenate(cents), np.concatenate(wts)
+        centers, _, _ = weighted_kmeans_finish(cents, wts, 3, seed=13)
+        again, _, _ = weighted_kmeans_finish(cents, wts, 3, seed=13)
+        assert np.array_equal(centers, again)  # hash coins, no RNG state
+        true = np.array([[0.0, 0.0, 0.0], [5.0, 5.0, 0.0],
+                         [0.0, 8.0, 8.0]])
+        for t in true:
+            assert np.min(np.linalg.norm(centers - t, axis=1)) < 1.0
+
+    def test_finish_survives_fewer_distinct_rows_than_k(self):
+        from mahout_spark.operators.clustering import weighted_kmeans_finish
+
+        cents = np.array([[0.0, 0.0], [0.0, 0.0], [3.0, 3.0]])
+        centers, _, converged = weighted_kmeans_finish(
+            cents, np.array([1.0, 2.0, 1.0]), 3)
+        assert centers.shape == (3, 2) and converged
+        assert np.isfinite(centers).all()
+
     def test_recovers_blobs_end_to_end(self, spark, blobs):
         from mahout_spark.operators.clustering import streaming_kmeans
 
