@@ -12,8 +12,11 @@ flagship path (SURVEY.md §3.3), as three DataFrame stages:
    preference estimate = similarity-weighted average of neighbor prefs
    (GenericUserBasedRecommender.doEstimatePreference:134-184); in CMS mode
    the neighbor pref is the CMS point query cm.get(item) with 0 treated
-   as missing (:156-158); estimates capped to the preference range and
-   required to have >= min_evidence data points (:176-178).
+   as missing (:156-158), run once per rated (user, item) BEFORE the
+   neighborhood fan-out; estimates capped to the preference range and
+   required to have >= min_evidence data points (:176-178). An estimate
+   whose similarities sum to 0 is skipped (the reference's NaN, which
+   TopItems and the evaluators skip).
 
 Evaluators mirror mr/.../impl/eval: deterministic-hash k-fold split
 (AbstractKFoldRecommenderEvaluator.java:41-74), MAE and RMSE
@@ -190,6 +193,30 @@ def threshold_neighborhood(sims: DataFrame, threshold: float) -> DataFrame:
     return sims.filter(F.col("sim") >= threshold)
 
 
+def _weighted_estimate(cand: DataFrame, keys: list[str], sim: str, val: str,
+                       min_evidence: int,
+                       boolean_pref: bool = False) -> DataFrame:
+    """keys + score — the similarity-weighted average per group,
+
+    sum(sim·val) / sum(sim), kept where >= ``min_evidence`` rows back it.
+    The denominator is sum(sim), NOT sum(|sim|): the reference divides
+    totalSimilarity through unmodified (GenericUserBasedRecommender.java:
+    164-178, GenericItemBasedRecommender.java:241-254), so estimates with
+    negative-similarity neighborhoods (Pearson) match bit-for-bit. A zero
+    sum gives the reference NaN, which TopItems and the evaluators skip;
+    here ``try_divide`` makes it NULL (no ANSI DIVIDE_BY_ZERO) and the row
+    is dropped. ``boolean_pref`` scores the plain sum(sim) instead.
+    """
+    s = F.col(sim)
+    score = (F.sum(s) if boolean_pref
+             else F.try_divide(F.sum(s * F.col(val)), F.sum(s)))
+    return (cand.groupBy(*keys)
+            .agg(score.alias("score"), F.count("*").alias("__n"))
+            .filter((F.col("__n") >= min_evidence)
+                    & F.col("score").isNotNull())
+            .drop("__n"))
+
+
 def recommend(prefs: DataFrame, neighborhood: DataFrame, top_n: int = 10,
               min_evidence: int = 2, user: str = "user_id",
               item: str = "item_id", pref: str = "pref",
@@ -223,17 +250,8 @@ def recommend(prefs: DataFrame, neighborhood: DataFrame, top_n: int = 10,
                         F.lit(1).alias("__seen"))
     cand = (cand.join(seen, ["__u", "__it"], "left_anti"))
     cand = filter_candidates(cand, "__it", rescorer)
-    # denominator is sum(sim), NOT sum(|sim|) — the reference's
-    # doEstimatePreference divides totalSimilarity through unmodified
-    # (GenericUserBasedRecommender.java:164-178), so estimates with
-    # negative-similarity neighborhoods (Pearson) match bit-for-bit.
-    score_expr = (F.sum("sim") if boolean_pref
-                  else F.sum(F.col("sim") * F.col("__p"))
-                  / F.sum(F.col("sim")))
-    est = cand.groupBy("__u", "__it").agg(
-        score_expr.alias("score"),
-        F.count("*").alias("__n"))
-    est = est.filter(F.col("__n") >= min_evidence)
+    est = _weighted_estimate(cand, ["__u", "__it"], "sim", "__p",
+                             min_evidence, boolean_pref=boolean_pref)
     if cap_range is not None:
         lo, hi = cap_range
         est = est.withColumn("score", F.least(F.lit(float(hi)), F.greatest(
@@ -257,28 +275,27 @@ def recommend_cms(prefs: DataFrame, profiles: DataFrame,
     (GenericUserBasedRecommender.java:139-159): candidate items come from
     neighbors' interaction lists, but the neighbor's preference VALUE is
     the CMS point query ``cm.get(itemID)`` against the neighbor's sketch
-    (0 ⇒ treated as missing, :156-158). Distributed shape: neighborhood ×
-    neighbor-items join → per-(neighbor, item) CMS lookup (Arrow batch,
-    sketch deserialized once per neighbor) → similarity-weighted average.
+    (0 ⇒ treated as missing, :156-158). The estimate depends on (neighbor,
+    item) only, never on the target, so the CMS lookup (Arrow batch) runs
+    once per rated (user, item) BEFORE the neighborhood fan-out; the
+    fan-out, the seen/rescorer filters and the similarity-weighted
+    average are plain SQL. Items whose similarities sum to 0 are skipped.
     """
     from mahout_spark.sketch.queries import cms_point_lookup
 
+    rated = prefs.select(F.col(user), F.col(item).alias("__it")).distinct()
+    est = cms_point_lookup(profiles, rated, F.col("__it").cast("long"),
+                           join_cols=[user], out_col="__pref")
+    est = est.filter(F.col("__pref") > 0)  # 0 ⇒ missing, reference :158
     nb = neighborhood.select(F.col("user_a").alias("__u"),
                              F.col("user_b").alias(user), "sim")
-    items = prefs.select(F.col(user), F.col(item).alias("__it")).distinct()
-    cand = nb.join(items, user)  # (target __u, neighbor user, item, sim)
+    cand = nb.join(est, user)  # (target __u, neighbor user, item, sim, pref)
     seen = prefs.select(F.col(user).alias("__u"),
                         F.col(item).alias("__it")).distinct()
     cand = cand.join(seen, ["__u", "__it"], "left_anti")
     cand = filter_candidates(cand, "__it", rescorer)
-    est = cms_point_lookup(profiles, cand, F.col("__it").cast("long"),
-                           join_cols=[user], out_col="__pref")
-    est = est.filter(F.col("__pref") > 0)  # 0 ⇒ missing, reference :158
-    scored = (est.groupBy("__u", "__it")
-              .agg((F.sum(F.col("sim") * F.col("__pref"))
-                    / F.sum(F.col("sim"))).alias("score"),
-                   F.count("*").alias("__n"))
-              .filter(F.col("__n") >= min_evidence))
+    scored = _weighted_estimate(cand, ["__u", "__it"], "sim", "__pref",
+                                min_evidence)
     if cap_range is not None:
         lo, hi = cap_range
         scored = scored.withColumn("score", F.least(
@@ -330,12 +347,8 @@ def recommend_item_based(prefs: DataFrame, item_sims: DataFrame,
                             F.col(item).alias("__cand")).distinct()
         cand = cand.join(seen, ["__u", "__cand"], "left_anti")
     cand = filter_candidates(cand, "__cand", rescorer)
-    ib_score = (F.sum("__s") if boolean_pref
-                else F.sum(F.col("__s") * F.col("__p"))
-                / F.sum(F.col("__s")))
-    est = (cand.groupBy("__u", "__cand")
-           .agg(ib_score.alias("score"), F.count("*").alias("__n"))
-           .filter(F.col("__n") >= min_evidence))
+    est = _weighted_estimate(cand, ["__u", "__cand"], "__s", "__p",
+                             min_evidence, boolean_pref=boolean_pref)
     if cap_range is not None:
         lo, hi = cap_range
         est = est.withColumn("score", F.least(F.lit(float(hi)), F.greatest(
@@ -403,11 +416,7 @@ def recommend_anonymous(prefs: DataFrame, anon_prefs: list,
                                  anon.select("__it").schema)
     cand = cand.join(F.broadcast(seen), "__it", "left_anti")
     cand = filter_candidates(cand, "__it", rescorer)
-    est = (cand.groupBy("__it")
-           .agg((F.sum(F.col("sim") * F.col("__p"))
-                 / F.sum("sim")).alias("score"),
-                F.count("*").alias("__n"))
-           .filter(F.col("__n") >= min_evidence)
+    est = (_weighted_estimate(cand, ["__it"], "sim", "__p", min_evidence)
            .select(F.col("__it").alias("item_id"), "score"))
     est = apply_rescorer(est, "item_id", "score", rescorer)
     return global_topk(est, "score", top_n, tiebreak_cols=["item_id"])
@@ -493,20 +502,16 @@ def evaluate_fold(train: DataFrame, test: DataFrame, n_neighbors: int = 20,
     nb = nearest_n_neighborhood(sims, n_neighbors)
     np_ = train.select(F.col(user).alias("__nb"), F.col(item).alias("__it"),
                        F.col(pref).cast("double").alias("__p"))
-    est = (nb.select(F.col("user_a").alias("__u"),
-                     F.col("user_b").alias("__nb"), "sim")
-           .join(np_, "__nb")
-           .groupBy("__u", "__it")
-           .agg((F.sum(F.col("sim") * F.col("__p"))
-                 / F.sum(F.col("sim"))).alias("__est"),
-                F.count("*").alias("__n"))
-           .filter(F.col("__n") >= 2))
+    cand = (nb.select(F.col("user_a").alias("__u"),
+                      F.col("user_b").alias("__nb"), "sim")
+            .join(np_, "__nb"))
+    est = _weighted_estimate(cand, ["__u", "__it"], "sim", "__p", 2)
     t = test.select(F.col(user).alias("__u"), F.col(item).alias("__it"),
                     F.col(pref).cast("double").alias("__truth"))
     scored = t.join(est, ["__u", "__it"])
     return scored.agg(
-        F.avg(F.abs(F.col("__est") - F.col("__truth"))).alias("mae"),
-        F.sqrt(F.avg(F.pow(F.col("__est") - F.col("__truth"), 2)))
+        F.avg(F.abs(F.col("score") - F.col("__truth"))).alias("mae"),
+        F.sqrt(F.avg(F.pow(F.col("score") - F.col("__truth"), 2)))
         .alias("rmse"),
         F.count("*").alias("n_scored"))
 

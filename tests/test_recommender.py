@@ -269,3 +269,136 @@ def test_item_based_recommender(spark):
     top = most_similar_items(sims, 1).collect()
     best = {r["item_a"]: r["item_b"] for r in top}
     assert best[2] == 0  # 0.5 > 0.25
+
+
+# ---------------------------------------------------------------------------
+# recommend_cms: exact replay, zero similarity sums, cache hygiene
+# ---------------------------------------------------------------------------
+
+
+def _cms_fixture():
+    """(prefs rows, neighborhood rows) — four targets sharing neighbors
+
+    5..8, integer prefs (one 0.0) and dyadic similarities, so every
+    weighted sum is exact in any summation order."""
+    rng = np.random.default_rng(5)
+    rows = []
+    for u in range(1, 9):
+        for i in rng.choice(np.arange(10, 22), size=6, replace=False):
+            rows.append((u, int(i), float(rng.integers(1, 6))))
+    rows.append((6, 30, 0.0))  # rated 0: CMS 0 unless it collides
+    nb = [(t, n, float(rng.choice([0.25, 0.5, 0.75, 1.0])))
+          for t in range(1, 5) for n in range(5, 9)]
+    return rows, nb
+
+
+def _replay_recommend_cms(rows, nb, profiles, top_n, min_evidence, cap,
+                          filtered=()):
+    """NumPy twin of recommend_cms: one point query per (target, neighbor,
+    candidate), 0 ⇒ missing, weighted average, evidence, cap, top-N."""
+    from mahout_spark.core import CountMinSketch
+
+    sketches = {u: CountMinSketch.deserialize(bytes(b))
+                for u, b in profiles.items()}
+    seen = {(u, i) for u, i, _ in rows}
+    acc, lookups = {}, []
+    for t, n, sim in nb:
+        for i in sorted({i for u, i, _ in rows if u == n}):
+            if (t, i) in seen or i in filtered:
+                continue
+            est = float(sketches[n].point_batch(np.array([i]))[0])
+            lookups.append((n, i, est))
+            if est > 0:
+                num, den, cnt = acc.get((t, i), (0.0, 0.0, 0))
+                acc[(t, i)] = (num + sim * est, den + sim, cnt + 1)
+    scored = {}
+    for (t, i), (num, den, cnt) in acc.items():
+        if cnt >= min_evidence and den != 0:
+            scored[(t, i)] = min(cap[1], max(cap[0], num / den))
+    out = set()
+    for t in {t for t, _ in scored}:
+        mine = sorted(((-s, i) for (u, i), s in scored.items() if u == t))
+        out |= {(t, i, -s) for s, i in mine[:top_n]}
+    return out, lookups
+
+
+@pytest.mark.parametrize("filtered", [(), (15,)])
+def test_recommend_cms_exact_replay(spark, filtered):
+    from mahout_spark.operators.recommender import (recommend_cms,
+                                                    user_cms_profiles)
+    from mahout_spark.operators.rescorer import IDRescorer
+
+    rows, nb_rows = _cms_fixture()
+    prefs = _prefs(spark, rows)
+    nb = spark.createDataFrame(nb_rows, "user_a long, user_b long, "
+                                        "sim double")
+    profiles = user_cms_profiles(prefs, depth=3, width=8, seed=2)
+    blobs = {r["user_id"]: r["sketch"] for r in profiles.collect()}
+    rescorer = (IDRescorer(is_filtered=lambda i: i.isin(*filtered))
+                if filtered else None)
+    got = recommend_cms(prefs, profiles, nb, top_n=3, min_evidence=2,
+                        cap_range=(1.0, 4.5), rescorer=rescorer).collect()
+    want, lookups = _replay_recommend_cms(rows, nb_rows, blobs, 3, 2,
+                                          (1.0, 4.5), filtered)
+    true = {(u, i): p for u, i, p in rows}
+    assert any(e == 0 for *_, e in lookups)  # the 0 ⇒ missing branch
+    assert any(e > true[(n, i)] for n, i, e in lookups)  # a collision
+    assert len(got) == len(want) > 8
+    assert {(r["user_id"], r["item_id"], r["score"]) for r in got} == want
+    if filtered:
+        unfiltered, _ = _replay_recommend_cms(rows, nb_rows, blobs, 3, 2,
+                                              (1.0, 4.5))
+        assert any(i in filtered for _, i, _ in unfiltered)
+        assert not any(r["item_id"] in filtered for r in got)
+
+
+def test_zero_similarity_sum_skips_the_item(spark):
+    """An item whose neighbors all have similarity 0 has no estimate (the
+    reference's NaN): no DIVIDE_BY_ZERO under ANSI mode, no row, and the
+    positive-similarity estimates are unchanged."""
+    from mahout_spark.operators.recommender import (recommend_cms,
+                                                    recommend_item_based,
+                                                    user_cms_profiles)
+
+    prefs = _prefs(spark, [(1, 10, 4.0), (2, 10, 5.0), (2, 11, 3.0),
+                           (3, 10, 2.0), (3, 11, 4.0), (4, 10, 1.0)])
+    nb = spark.createDataFrame(
+        [(1, 2, 0.0), (1, 3, 0.0), (4, 2, 0.5), (4, 3, 0.25)],
+        "user_a long, user_b long, sim double")
+    profiles = user_cms_profiles(prefs, depth=3, width=1024, seed=1)
+    want = {(4, 11): (0.5 * 3.0 + 0.25 * 4.0) / (0.5 + 0.25)}
+    for out in (recommend(prefs, nb, top_n=5, min_evidence=2),
+                recommend_cms(prefs, profiles, nb, top_n=5,
+                              min_evidence=2)):
+        got = {(r["user_id"], r["item_id"]): r["score"]
+               for r in out.collect()}
+        assert got == want
+
+    # item-based: item 12's only similarity to user 1's items is 0
+    sims = spark.createDataFrame([(11, 10, 0.5), (12, 10, 0.0)],
+                                 "item_a long, item_b long, sim double")
+    got = {(r["user_id"], r["item_id"]): r["score"]
+           for r in recommend_item_based(prefs.filter("user_id = 1"), sims,
+                                         min_evidence=1).collect()}
+    assert got == {(1, 11): 4.0}
+
+
+def test_cms_recommender_chain_caches_nothing_else(spark):
+    """profiles → cms_user_similarity(top_n) → recommend_cms caches no
+    table of its own. The one table the chain leaves cached is the
+    profiles frame that cms_topk_cosine pins for its block-count probe
+    and never releases; recommend_cms must add nothing beside it."""
+    from mahout_spark.operators.recommender import (recommend_cms,
+                                                    user_cms_profiles)
+
+    rows, _ = _cms_fixture()
+    prefs = _prefs(spark, rows)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    profiles = user_cms_profiles(prefs, depth=3, width=64, seed=2)
+    nb = cms_user_similarity(profiles, top_n=3)
+    assert recommend_cms(prefs, profiles, nb, top_n=3,
+                         min_evidence=1).collect()
+    assert len(set(jsc.getPersistentRDDs().keys()) - before) <= 1
+    profiles.unpersist(blocking=True)
+    assert set(jsc.getPersistentRDDs().keys()) <= before
