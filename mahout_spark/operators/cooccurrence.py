@@ -19,11 +19,12 @@ Scale design (10^12 interactions):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mahout_spark.functions.hashutil import deterministic_coin
 from mahout_spark.functions.measures import llr_cooc_expr
+from mahout_spark.operators.rowsim import symmetric_pair_topk
 from mahout_spark.operators.topk import topk_per_group
 
 
@@ -66,46 +67,44 @@ def sample_down_and_binarize(triples: DataFrame, seed: int = 0xDEADBEEF,
             .select(row, col))
 
 
+def _row_key(df: DataFrame, row: str, exact: bool = False) -> Column:
+    """The self-join key of a pair join on ``row``.
+
+    String-keyed rows (urls) are pre-hashed: the row id never reaches the
+    output, and a fixed-width join key cuts sort/probe cost ~1.5x at web
+    scale (measured with the single-long variant). The key is a struct of
+    TWO independent xxhash64 draws — effectively 128 bits — so the
+    any-collision probability among n rows is ~n^2/2^129: ~3e-12 even at
+    n = 10^12 rows, vs ~3% at 10^9 rows for a single 64-bit key.
+    ``exact=True`` keeps the exact string join; integer keys are always
+    exact.
+    """
+    if exact or df.schema[row].dataType.simpleString() not in ("string",
+                                                               "binary"):
+        return F.col(row)
+    return F.struct(F.xxhash64(F.col(row)).alias("h1"),
+                    F.xxhash64(F.col(row), F.lit(1)).alias("h2"))
+
+
 def cooccurrence_counts(interactions: DataFrame, row: str = "row_id",
                         col: str = "col_id",
                         include_self: bool = False,
-                        exact_row_join: bool = False,
-                        ordered: bool = True) -> DataFrame:
+                        exact_row_join: bool = False) -> DataFrame:
     """A'A in long form: (item_a, item_b, n_ab) for items sharing a row.
 
     One ordered pair per direction (a != b unless include_self) so per-item
     top-K sees every neighbor. Input must be binarized/distinct.
 
-    The self-join key is pre-hashed when rows are string-keyed (urls): the
-    row id never reaches the output, and a fixed-width join key cuts
-    sort/probe cost ~1.5x at web scale (measured with the single-long
-    variant). The key is a struct of TWO independent xxhash64 draws —
-    effectively 128 bits — so the any-collision probability among n rows
-    is ~n^2/2^129: ~3e-12 even at n = 10^12 rows, vs ~3% at 10^9 rows for
-    the old single 64-bit key. Pass ``exact_row_join=True`` to keep the
-    exact string join (the oracle-checked gate paths use integer keys,
-    which are always exact; a pytest asserts hash-path == exact-path
-    parity on string keys).
+    String row ids are joined on the 128-bit ``_row_key`` hash; pass
+    ``exact_row_join=True`` to keep the exact string join (the
+    oracle-checked gate paths use integer keys, which are always exact; a
+    pytest asserts hash-path == exact-path parity on string keys).
     """
-    if not ordered and include_self:
-        raise ValueError(
-            "ordered=False keeps one row per unordered pair (item_a < "
-            "item_b) and so cannot emit self-pairs; use ordered=True with "
-            "include_self=True")
-    rtype = interactions.schema[row].dataType.simpleString()
-    rkey = (F.struct(F.xxhash64(F.col(row)).alias("h1"),
-                     F.xxhash64(F.col(row), F.lit(1)).alias("h2"))
-            if rtype in ("string", "binary") and not exact_row_join
-            else F.col(row))
+    rkey = _row_key(interactions, row, exact_row_join)
     a = interactions.select(rkey.alias("__r"), F.col(col).alias("item_a"))
     b = interactions.select(rkey.alias("__r"), F.col(col).alias("item_b"))
     pairs = a.join(b, "__r")
-    if not ordered:
-        # one row per UNORDERED pair — halves the fan-out of the big
-        # (item_a, item_b) aggregation; callers with symmetric scores
-        # mirror after scoring (n_ab and LLR are (a,b)-symmetric)
-        pairs = pairs.filter(F.col("item_a") < F.col("item_b"))
-    elif not include_self:
+    if not include_self:
         pairs = pairs.filter(F.col("item_a") != F.col("item_b"))
     return pairs.groupBy("item_a", "item_b").agg(
         F.count("*").alias("n_ab"))
@@ -116,55 +115,33 @@ def llr_item_similarity(triples: DataFrame, row: str = "row_id",
                         min_llr: float | None = None,
                         seed: int = 0xDEADBEEF,
                         max_interactions: int = 500,
-                        downsample: bool = True,
-                        pair_mode: str = "unordered") -> DataFrame:
+                        downsample: bool = True) -> DataFrame:
     """The full cooccurrences() pipeline -> (item_a, item_b, llr) top-K per
 
     item_a. numUsers = distinct row count; n_x = per-item distinct-row
     counts; LLR threshold takes precedence over top-K when given
-    (SimilarityAnalysis.scala:312-376). ``pair_mode`` as in
-    row_similarity: 'unordered' (count each pair once + mirror) or
-    'ordered' (both directions up front; A/B benchmarking).
+    (SimilarityAnalysis.scala:312-376).
     """
     inter = (sample_down_and_binarize(triples, seed, max_interactions,
                                       max_interactions, row, col)
              if downsample else triples.select(row, col).distinct())
     inter = inter.persist()
-    n_users = inter.select(row).distinct().count()
+    n_users = F.lit(inter.select(row).distinct().count())
     # pinned: consumed twice (n_a / n_b joins) — the two differently-
     # aliased branches otherwise defeat exchange reuse and re-run the
     # whole aggregation per branch (same pattern as rowsim's norms;
     # measured as two identical map stages on the llr bench)
-    item_counts = inter.groupBy(col).agg(F.count("*").alias("n")).persist()
-    # n_ab and LLR are symmetric in (a, b): count/score each unordered
-    # pair once (half the big pair shuffle), mirror for the per-item top-K
-    unordered = pair_mode == "unordered"
-    cooc = cooccurrence_counts(inter, row, col, ordered=not unordered)
-    scored = (cooc
-              .join(item_counts.select(F.col(col).alias("item_a"),
-                                       F.col("n").alias("n_a")), "item_a")
-              .join(item_counts.select(F.col(col).alias("item_b"),
-                                       F.col("n").alias("n_b")), "item_b")
-              .withColumn("llr", llr_cooc_expr(
-                  F.col("n_a"), F.col("n_b"), F.col("n_ab"),
-                  F.lit(n_users))))
-    if min_llr is not None:
-        scored = scored.filter(F.col("llr") >= min_llr)
-    mirrored = scored.select("item_a", "item_b", "n_ab", "llr")
-    if unordered:
-        # explode-mirror, not a self-union (a union would re-execute the
-        # pair join + count agg per branch — see tools/ab_pairs.py)
-        mirrored = (scored.select(F.explode(F.array(
-            F.struct(F.col("item_a"), F.col("item_b"),
-                     F.col("n_ab"), F.col("llr")),
-            F.struct(F.col("item_b").alias("item_a"),
-                     F.col("item_a").alias("item_b"),
-                     F.col("n_ab"), F.col("llr"))))
-            .alias("__p"))
-            .select("__p.item_a", "__p.item_b", "__p.n_ab", "__p.llr"))
-    out = topk_per_group(mirrored, ["item_a"], "llr", k,
-                         tiebreak_cols=["item_b"])
-    return out.select("item_a", "item_b", "n_ab", "llr")
+    item_counts = inter.groupBy(F.col(col).alias("ent")).agg(
+        F.count("*").alias("norm")).persist()
+    cells = inter.select(_row_key(inter, row).alias("key"),
+                         F.col(col).alias("ent"), F.lit(1).alias("v"))
+    return symmetric_pair_topk(
+        cells, item_counts, F.count("*"),
+        lambda n_ab, n_a, n_b: llr_cooc_expr(n_a, n_b, n_ab, n_users),
+        k, min_llr).select(F.col("a").alias("item_a"),
+                           F.col("b").alias("item_b"),
+                           F.col("dots").alias("n_ab"),
+                           F.col("score").alias("llr"))
 
 
 def llr_cross_similarity(triples_a: DataFrame, triples_b: DataFrame,
@@ -190,9 +167,7 @@ def llr_cross_similarity(triples_a: DataFrame, triples_b: DataFrame,
     n_users = (a.select(row).union(b.select(row)).distinct().count())
     counts_a = a.groupBy(col).agg(F.count("*").alias("n_a"))
     counts_b = b.groupBy(col).agg(F.count("*").alias("n_b"))
-    rtype = a.schema[row].dataType.simpleString()
-    rkey = (F.xxhash64(F.col(row)) if rtype in ("string", "binary")
-            else F.col(row))
+    rkey = _row_key(a, row)
     pairs = (a.select(rkey.alias("__r"), F.col(col).alias("item_a"))
              .join(b.select(rkey.alias("__r"),
                             F.col(col).alias("item_b")), "__r")

@@ -11,12 +11,12 @@ Window top-K. The per-column pair generation mirrors CooccurrencesMapper
 
 Scale: the column join fan-out is quadratic in column frequency — cap heavy
 columns first (downsample, as the reference's ObservationsPerColumn phase);
-dots groupBy((row_a,row_b)) is the one big shuffle, AQE-skew-handled.
+the pair-dots groupBy((a, b)) is the one big shuffle, AQE-skew-handled.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mahout_spark.functions.measures import MEASURES, Measure
@@ -52,22 +52,57 @@ def _preprocess(triples: DataFrame, measure: Measure, row: str, col: str,
     return df
 
 
+def symmetric_pair_topk(cells: DataFrame, norms: DataFrame, dots: Column,
+                        score, k: int, threshold: float | None = None,
+                        extra: DataFrame | None = None) -> DataFrame:
+    """The one A'A plan under ``row_similarity`` and ``llr_item_similarity``:
+    (a, b, dots, score), the top-``k`` b per a by score (ties: smaller b).
+
+    ``cells`` is (key, ent, v); two ents pair when they share a key.
+    ``dots`` aggregates each pair's ``va``/``vb`` columns; ``norms`` is
+    (ent, norm), joined once per side; ``score(dots, norm_a, norm_b)``
+    must be symmetric in (a, b), so each unordered pair (a < b) is
+    aggregated and scored ONCE — half the fan-out of the one big shuffle —
+    and mirrored afterwards. ``extra`` rows (same columns, e.g. a
+    diagonal) join the candidates before the top-K.
+    """
+    pairs = (cells.select("key", F.col("ent").alias("a"), F.col("v").alias("va"))
+             .join(cells.select("key", F.col("ent").alias("b"),
+                                F.col("v").alias("vb")), "key")
+             .filter(F.col("a") < F.col("b"))
+             .groupBy("a", "b").agg(dots.alias("dots")))
+    scored = (pairs
+              .join(norms.select(F.col("ent").alias("a"),
+                                 F.col("norm").alias("norm_a")), "a")
+              .join(norms.select(F.col("ent").alias("b"),
+                                 F.col("norm").alias("norm_b")), "b")
+              .withColumn("score", score(F.col("dots"), F.col("norm_a"),
+                                         F.col("norm_b"))))
+    if threshold is not None:
+        scored = scored.filter(F.col("score") >= threshold)
+    # mirror with ONE explode, not a self-union: a union re-executes the
+    # whole upstream (pair join + dots agg) once per branch — measured 17%
+    # slower at sf0.1 than generating both directions up front; the
+    # explode emits both directions from a single computation of each pair
+    mirrored = scored.select(F.explode(F.array(
+        F.struct("a", "b", "dots", "score"),
+        F.struct(F.col("b").alias("a"), F.col("a").alias("b"), "dots",
+                 "score"))).alias("__p")).select("__p.*")
+    if extra is not None:
+        mirrored = mirrored.unionByName(extra)
+    return topk_per_group(mirrored, ["a"], "score", k, tiebreak_cols=["b"])
+
+
 def row_similarity(triples: DataFrame, measure: str = "cosine",
                    row: str = "row_id", col: str = "col_id",
                    val: str = "value", k: int = 100,
                    threshold: float | None = None,
                    exclude_self: bool = True,
-                   n_cols: int | None = None,
-                   pair_mode: str = "unordered") -> DataFrame:
+                   n_cols: int | None = None) -> DataFrame:
     """(row_a, row_b, sim) — top-K most similar rows per row under the
 
     chosen measure. Measures: cosine, pearson, euclidean, tanimoto,
     cityblock, loglikelihood, cooccurrence (reference's 7 plug-ins).
-
-    ``pair_mode``: 'unordered' counts each pair once (half the pair
-    shuffle) and mirrors after scoring; 'ordered' generates both
-    directions up front (the pre-mirror plan, kept for interleaved A/B
-    benchmarking — results are identical, see tools/ab_pairs.py).
     """
     m = MEASURES[measure]
     df = _preprocess(triples, m, row, col, val)
@@ -75,7 +110,7 @@ def row_similarity(triples: DataFrame, measure: str = "cosine",
         # only the LLR contingency needs the column count — don't pay a
         # distinct-count action for the other measures
         n_cols = df.select("col_id").distinct().count()
-    n_cols = n_cols or 0
+    n_cols = F.lit(float(n_cols or 0))
     df = df.persist()
 
     # row norms: L0 (nnz) for count-based measures, sum(v^2) otherwise —
@@ -85,55 +120,26 @@ def row_similarity(triples: DataFrame, measure: str = "cosine",
     # pinned: consumed twice (norm_a / norm_b joins) and — exclude_self
     # aside — the two differently-aliased branches were measured to defeat
     # exchange reuse, re-running the whole norm aggregation per branch
-    norms = df.groupBy("row_id").agg(norm_col.alias("norm")).persist()
+    norms = df.groupBy(F.col("row_id").alias("ent")).agg(
+        norm_col.alias("norm")).persist()
 
-    a = df.select(F.col("col_id").alias("__c"), F.col("row_id").alias("row_a"),
-                  F.col("value").alias("__va"))
-    b = df.select(F.col("col_id").alias("__c"), F.col("row_id").alias("row_b"),
-                  F.col("value").alias("__vb"))
-    # every measure is symmetric in (a, b) (the LLR contingency swaps
-    # k12/k21), so compute each unordered pair ONCE (row_a < row_b) —
-    # halves the fan-out of the one big shuffle — and mirror the scored
-    # pairs afterwards for the per-row top-K
-    unordered = pair_mode == "unordered"
-    pair_filter = (F.col("row_a") < F.col("row_b") if unordered
-                   else F.col("row_a") != F.col("row_b"))
-    pairs = a.join(b, "__c").filter(pair_filter)
-    dots = pairs.groupBy("row_a", "row_b").agg(
-        F.sum(F.col("__va") * F.col("__vb")).alias("dots"))
+    def score(dots, norm_a, norm_b):
+        return m.similarity_expr(dots, norm_a, norm_b, n_cols)
 
-    scored = (dots
-              .join(norms.select(F.col("row_id").alias("row_a"),
-                                 F.col("norm").alias("norm_a")), "row_a")
-              .join(norms.select(F.col("row_id").alias("row_b"),
-                                 F.col("norm").alias("norm_b")), "row_b")
-              .withColumn("sim", m.similarity_expr(
-                  F.col("dots"), F.col("norm_a"), F.col("norm_b"),
-                  F.lit(float(n_cols)))))
-    if threshold is not None:
-        scored = scored.filter(F.col("sim") >= threshold)
-    mirrored = scored.select("row_a", "row_b", "sim")
-    if unordered:
-        # mirror with ONE explode, not a self-union: a union re-executes
-        # the whole upstream (pair join + dots agg) once per branch —
-        # measured 17% slower than the ordered plan at sf0.1
-        # (tools/ab_pairs.py); the explode emits both directions from a
-        # single computation of each unordered pair
-        mirrored = (scored.select(F.explode(F.array(
-            F.struct(F.col("row_a"), F.col("row_b"), F.col("sim")),
-            F.struct(F.col("row_b").alias("row_a"),
-                     F.col("row_a").alias("row_b"), F.col("sim"))))
-            .alias("__p")).select("__p.row_a", "__p.row_b", "__p.sim"))
+    diag = None
     if not exclude_self:
         # dot(i,i) == norm_i under every preprocessing here (nnz for
         # count-based measures, sum v^2 otherwise)
-        diag = norms.select(
-            F.col("row_id").alias("row_a"), F.col("row_id").alias("row_b"),
-            m.similarity_expr(F.col("norm"), F.col("norm"), F.col("norm"),
-                              F.lit(float(n_cols))).alias("sim"))
+        diag = norms.select(F.col("ent").alias("a"), F.col("ent").alias("b"),
+                            F.col("norm").alias("dots"),
+                            score(F.col("norm"), F.col("norm"),
+                                  F.col("norm")).alias("score"))
         if threshold is not None:
-            diag = diag.filter(F.col("sim") >= threshold)
-        mirrored = mirrored.unionByName(diag)
-    return topk_per_group(mirrored, ["row_a"], "sim", k,
-                          tiebreak_cols=["row_b"]).select(
-        "row_a", "row_b", "sim")
+            diag = diag.filter(F.col("score") >= threshold)
+    cells = df.select(F.col("col_id").alias("key"),
+                      F.col("row_id").alias("ent"), F.col("value").alias("v"))
+    return symmetric_pair_topk(
+        cells, norms, F.sum(F.col("va") * F.col("vb")), score, k, threshold,
+        extra=diag).select(F.col("a").alias("row_a"),
+                           F.col("b").alias("row_b"),
+                           F.col("score").alias("sim"))

@@ -114,9 +114,9 @@ def get_spark(app: str = "mahout_spark", master: str | None = None,
         src_mtime = max((os.path.getmtime(os.path.join(r, f))
                          for r, _, fs in os.walk(pkg_dir)
                          for f in fs if f.endswith(".py")), default=0.0)
-        # a stale committed zip would run OLD code on executors while the
-        # driver runs new — rebuild whenever any source is at least as
-        # new (<=: a fresh clone can stamp zip and sources identically)
+        # a stale zip would run OLD code on executors while the driver
+        # runs new — rebuild whenever any source is at least as new (<=:
+        # a build in the same second can stamp zip and sources identically)
         if (not os.path.exists(zip_path)
                 or os.path.getmtime(zip_path) <= src_mtime):
             import subprocess

@@ -67,6 +67,50 @@ def test_f3_llr_atb_golden(spark):
     assert np.linalg.norm(got - ATB_CONTROL) < 1e-10
 
 
+
+def _pair_fixture(spark, row_type="int"):
+    """12 rows x 9 items, every cell distinct, rows keyed by int or by
+    string; small enough that no downsampling cap (500) ever bites."""
+    rng = np.random.default_rng(5)
+    cells = [(u, i) for u in range(12) for i in range(9)
+             if rng.random() < 0.4 + 0.05 * i]
+    if row_type == "string":
+        cells = [(f"user-{u}", i) for u, i in cells]
+    return spark.createDataFrame(cells, f"row_id {row_type}, col_id int")
+
+
+def test_llr_cross_similarity_string_rows_match_integer_rows(spark):
+    """The hashed row key of a string-keyed A'B join gives the same result
+    as the exact integer join on the same matrix."""
+    ints = _pair_fixture(spark)
+    strs = _pair_fixture(spark, "string")
+    view_i = ints.withColumn("col_id", (F.col("col_id") * 7) % 9)
+    view_s = strs.withColumn("col_id", (F.col("col_id") * 7) % 9)
+    got_i = sorted(map(tuple, llr_cross_similarity(ints, view_i,
+                                                   k=50).collect()))
+    got_s = sorted(map(tuple, llr_cross_similarity(strs, view_s,
+                                                   k=50).collect()))
+    assert got_s == got_i
+    assert len(got_i) > 20
+
+
+def test_rowsim_loglikelihood_equals_llr_item_similarity(spark):
+    """Both operators run one pair kernel: LLR row similarity over the
+    transposed matrix keeps exactly the llr_item_similarity pairs, with
+    sim == 1 - 1/(1 + llr) bit for bit (equal integer counts, one
+    llr_cooc_expr)."""
+    triples = _pair_fixture(spark).withColumn("value", F.lit(1.0))
+    llr = {(r.item_a, r.item_b): r.llr for r in llr_item_similarity(
+        triples, k=100, downsample=False).collect()}
+    sim = {(r.row_a, r.row_b): r.sim for r in row_similarity(
+        triples, measure="loglikelihood", row="col_id", col="row_id",
+        k=100).collect()}
+    assert len(llr) > 40
+    assert sim.keys() == llr.keys()
+    assert all(sim[p] == 1.0 - 1.0 / (1.0 + llr[p]) for p in llr)
+    assert any(v > 0 for v in llr.values())
+
+
 F2_LINES = """u1,purchase,iphone
 u1,purchase,ipad
 u2,purchase,nexus

@@ -276,7 +276,7 @@ bandwidth fluctuates 4-7x on a minutes timescale, so the per-size
 minimum — reps that landed outside a bandwidth trough — is the cleanest
 estimate of the job's true cost; medians are reported alongside.
 
-## Why N={n_small} (see tools/hw_probe.py)
+## Why N={n_small} (see BENCH/hw_probe.json)
 
 The N/4N pair must sit in the machine's linear region for the proxy to
 measure the JOB rather than the box. A raw-CPU probe (pure-Python spin in

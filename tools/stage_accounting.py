@@ -4,7 +4,7 @@ Runs jobs/topk_cosine.py with the Spark event log enabled, then parses the
 log into a per-phase table: input bytes, shuffle read/write bytes, executor
 CPU vs run time, and effective bytes/sec — the evidence that says WHICH
 phases are memory-bandwidth-bound on this host and how close they run to
-the measured STREAM-triad ceiling (tools/hw_probe.py).
+the measured STREAM-triad ceiling (BENCH/hw_probe.json).
 
 Usage: python tools/stage_accounting.py [--docs 200000] [--cpus 8]
 Writes BENCH/stage_accounting.json and prints a markdown table.
