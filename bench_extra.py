@@ -25,14 +25,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from tools.dump_plans import formatted  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 EVDIR = "/tmp/spark-events-bench-extra"
-
-
-def formatted(df):
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
 
 
 # ---------------------------------------------------------------------------
@@ -166,14 +163,6 @@ def dump_plans(spark, names, plandir, suffix):
         with open(path, "w") as f:
             f.write("\n\n".join(txts))
         print(f"wrote {path}")
-
-
-def stage_table(evdir):
-    from tools.stage_accounting import parse_eventlog
-    stages = []
-    for line in _all_event_lines(evdir):
-        pass
-    return stages
 
 
 def _all_event_lines(evdir):

@@ -217,6 +217,36 @@ def _weighted_estimate(cand: DataFrame, keys: list[str], sim: str, val: str,
             .drop("__n"))
 
 
+def _rank(cand: DataFrame, prefs: DataFrame, user: str, item: str,
+          cand_item: str, sim: str, val: str, top_n: int,
+          min_evidence: int, cap_range: tuple[float, float] | None,
+          rescorer: IDRescorer | None, boolean_pref: bool = False,
+          exclude_seen: bool = True) -> DataFrame:
+    """(user_id, item_id, score) — the user recommenders' shared tail over
+
+    ``cand`` (__u, ``cand_item``, ``sim``, ``val``): drop items the user
+    has seen, drop rescorer-filtered items, similarity-weighted estimate,
+    cap to ``cap_range``, rescore, top-``top_n`` per user (tiebreak
+    item)."""
+    if exclude_seen:
+        seen = prefs.select(F.col(user).alias("__u"),
+                            F.col(item).alias(cand_item)).distinct()
+        cand = cand.join(seen, ["__u", cand_item], "left_anti")
+    cand = filter_candidates(cand, cand_item, rescorer)
+    est = _weighted_estimate(cand, ["__u", cand_item], sim, val,
+                             min_evidence, boolean_pref=boolean_pref)
+    if cap_range is not None:
+        lo, hi = cap_range
+        est = est.withColumn("score", F.least(F.lit(float(hi)), F.greatest(
+            F.lit(float(lo)), F.col("score"))))
+    scored = apply_rescorer(
+        est.select(F.col("__u").alias("user_id"),
+                   F.col(cand_item).alias("item_id"), "score"),
+        "item_id", "score", rescorer)
+    return topk_per_group(scored, ["user_id"], "score", top_n,
+                          tiebreak_cols=["item_id"])
+
+
 def recommend(prefs: DataFrame, neighborhood: DataFrame, top_n: int = 10,
               min_evidence: int = 2, user: str = "user_id",
               item: str = "item_id", pref: str = "pref",
@@ -245,23 +275,9 @@ def recommend(prefs: DataFrame, neighborhood: DataFrame, top_n: int = 10,
                              F.col("user_b").alias("__nb"), "sim")
     np_ = prefs.select(F.col(user).alias("__nb"), F.col(item).alias("__it"),
                        F.col(pref).cast("double").alias("__p"))
-    cand = nb.join(np_, "__nb")
-    seen = prefs.select(F.col(user).alias("__u"), F.col(item).alias("__it"),
-                        F.lit(1).alias("__seen"))
-    cand = (cand.join(seen, ["__u", "__it"], "left_anti"))
-    cand = filter_candidates(cand, "__it", rescorer)
-    est = _weighted_estimate(cand, ["__u", "__it"], "sim", "__p",
-                             min_evidence, boolean_pref=boolean_pref)
-    if cap_range is not None:
-        lo, hi = cap_range
-        est = est.withColumn("score", F.least(F.lit(float(hi)), F.greatest(
-            F.lit(float(lo)), F.col("score"))))
-    scored = apply_rescorer(
-        est.select(F.col("__u").alias("user_id"),
-                   F.col("__it").alias("item_id"), "score"),
-        "item_id", "score", rescorer)
-    return topk_per_group(scored, ["user_id"], "score", top_n,
-                          tiebreak_cols=["item_id"])
+    return _rank(nb.join(np_, "__nb"), prefs, user, item, "__it", "sim",
+                 "__p", top_n, min_evidence, cap_range, rescorer,
+                 boolean_pref=boolean_pref)
 
 
 def recommend_cms(prefs: DataFrame, profiles: DataFrame,
@@ -290,22 +306,8 @@ def recommend_cms(prefs: DataFrame, profiles: DataFrame,
     nb = neighborhood.select(F.col("user_a").alias("__u"),
                              F.col("user_b").alias(user), "sim")
     cand = nb.join(est, user)  # (target __u, neighbor user, item, sim, pref)
-    seen = prefs.select(F.col(user).alias("__u"),
-                        F.col(item).alias("__it")).distinct()
-    cand = cand.join(seen, ["__u", "__it"], "left_anti")
-    cand = filter_candidates(cand, "__it", rescorer)
-    scored = _weighted_estimate(cand, ["__u", "__it"], "sim", "__pref",
-                                min_evidence)
-    if cap_range is not None:
-        lo, hi = cap_range
-        scored = scored.withColumn("score", F.least(
-            F.lit(float(hi)), F.greatest(F.lit(float(lo)), F.col("score"))))
-    out = apply_rescorer(
-        scored.select(F.col("__u").alias("user_id"),
-                      F.col("__it").alias("item_id"), "score"),
-        "item_id", "score", rescorer)
-    return topk_per_group(out, ["user_id"], "score", top_n,
-                          tiebreak_cols=["item_id"])
+    return _rank(cand, prefs, user, item, "__it", "sim", "__pref", top_n,
+                 min_evidence, cap_range, rescorer)
 
 
 def recommend_item_based(prefs: DataFrame, item_sims: DataFrame,
@@ -341,24 +343,9 @@ def recommend_item_based(prefs: DataFrame, item_sims: DataFrame,
     s = item_sims.select(F.col("item_a").alias("__cand"),
                          F.col("item_b").alias("__j"),
                          F.col("sim").cast("double").alias("__s"))
-    cand = p.join(s, "__j")
-    if exclude_seen:
-        seen = prefs.select(F.col(user).alias("__u"),
-                            F.col(item).alias("__cand")).distinct()
-        cand = cand.join(seen, ["__u", "__cand"], "left_anti")
-    cand = filter_candidates(cand, "__cand", rescorer)
-    est = _weighted_estimate(cand, ["__u", "__cand"], "__s", "__p",
-                             min_evidence, boolean_pref=boolean_pref)
-    if cap_range is not None:
-        lo, hi = cap_range
-        est = est.withColumn("score", F.least(F.lit(float(hi)), F.greatest(
-            F.lit(float(lo)), F.col("score"))))
-    scored = apply_rescorer(
-        est.select(F.col("__u").alias("user_id"),
-                   F.col("__cand").alias("item_id"), "score"),
-        "item_id", "score", rescorer)
-    return topk_per_group(scored, ["user_id"], "score", top_n,
-                          tiebreak_cols=["item_id"])
+    return _rank(p.join(s, "__j"), prefs, user, item, "__cand", "__s", "__p",
+                 top_n, min_evidence, cap_range, rescorer,
+                 boolean_pref=boolean_pref, exclude_seen=exclude_seen)
 
 
 def recommend_anonymous(prefs: DataFrame, anon_prefs: list,

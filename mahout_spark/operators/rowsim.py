@@ -105,13 +105,14 @@ def row_similarity(triples: DataFrame, measure: str = "cosine",
     cityblock, loglikelihood, cooccurrence (reference's 7 plug-ins).
     """
     m = MEASURES[measure]
-    df = _preprocess(triples, m, row, col, val)
+    # pinned before the LLR column count below, so that action fills the
+    # cache instead of computing the preprocessing a second time
+    df = _preprocess(triples, m, row, col, val).persist()
     if n_cols is None and measure == "loglikelihood":
         # only the LLR contingency needs the column count — don't pay a
         # distinct-count action for the other measures
         n_cols = df.select("col_id").distinct().count()
     n_cols = F.lit(float(n_cols or 0))
-    df = df.persist()
 
     # row norms: L0 (nnz) for count-based measures, sum(v^2) otherwise —
     # computed on the PREPROCESSED values, as the reference normalizes first

@@ -32,7 +32,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mahout_spark.sketch.agg import SketchSpec, sketch_by_key
+from mahout_spark.sketch.agg import (SketchSpec, merge_sketch_rows,
+                                     sketch_by_key)
 
 LINEAGE_SCHEMA = ("job_id string, shard int, n_rows long, n_groups long, "
                   "sketch_md5 string, wall_s double")
@@ -141,21 +142,6 @@ class CheckpointedSketchJob:
         return self._merge(spec, group_cols)
 
     def _merge(self, spec: SketchSpec, group_cols: list[str]) -> DataFrame:
-        import pandas as pd
-
-        from mahout_spark.sketch.agg import _merge_blobs
-
         partials = self.spark.read.parquet(
             os.path.join(self.partials_path, "shard=*"))
-
-        def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            head = pdf.iloc[[0]][group_cols].copy()
-            head["sketch"] = [_merge_blobs(spec, pdf["sketch"])]
-            return head
-
-        fields = [partials.schema[g] for g in group_cols]
-        from pyspark.sql.types import (BinaryType, StructField, StructType)
-
-        schema = StructType(fields + [StructField("sketch", BinaryType())])
-        return partials.groupBy(*group_cols).applyInPandas(merge_group,
-                                                           schema=schema)
+        return merge_sketch_rows(partials, spec, group_cols)

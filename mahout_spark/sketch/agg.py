@@ -1,26 +1,32 @@
 """Generic mergeable-sketch aggregation over DataFrames.
 
 The distributed pattern (north rule: "built per partition ... merged
-associatively through treeAggregate-style combine steps"):
+associatively through treeAggregate-style combine steps"). All three
+builders (``sketch_by_key``, ``sketch_per_group``,
+``sketch_per_group_skewed``) share one front end:
 
-  phase 1 (map-side combine): ``mapInPandas`` walks Arrow batches; for each
-      batch it groups locally by the group key and updates one partial
-      sketch per (group) — the shuffle then carries only
-      #batches x #groups binary blobs, never raw rows. This is the direct
-      analog of the reference's per-partition dense-accumulator pattern
-      (SparkEngine.scala:44-82 colSums/nnz) and of AtA's map-side combine
-      (blas/AtA.scala:203-220).
+  prologue (``_slim``): (group, key, value), the key mapped by the one
+      sketch-key rule (``_sketch_key``) or an explicit ``key_expr``, then
+      the spec's JVM preagg ('sum' / 'distinct' / 'value_sum').
 
-  phase 2 (reduce): ``applyInPandas`` per group key merges blobs
-      associatively. With ``n_salt > 1`` a salted intermediate level is
-      inserted (groupBy(key, salt) merge -> groupBy(key) merge) — the
-      treeAggregate depth-2 shape, for head-key skew (north rule requires
-      explicit salting; the reference only downsamples).
+  build (``_build_blob``): make -> update | update_weighted -> serialize.
+      ``sketch_by_key`` runs it per Arrow batch and group in
+      ``mapInPandas`` — a map-side combine, so the shuffle carries only
+      #batches x #groups blobs, never raw rows (the reference's
+      per-partition dense accumulators, SparkEngine.scala:44-82, and
+      AtA's map-side combine, blas/AtA.scala:203-220);
+      ``sketch_per_group`` runs it once per group in ``applyInPandas``.
+
+  merge (``merge_sketch_rows``): ``applyInPandas`` per group key merges
+      blobs associatively. ``n_salt > 1`` inserts a salted level
+      (groupBy(key, salt) -> groupBy(key)) — the treeAggregate depth-2
+      shape, for head-key skew (the reference only downsamples). Rollups,
+      checkpoint resume and stream upserts use the same merge.
 
 Determinism: partial emission order never affects the result for CMS/HLL/
 Bloom (bit-exact merges); t-digest/KLL are order-insensitive up to their
-published error bounds. No rand() anywhere — salts are hashes of row
-content.
+published error bounds. No rand() anywhere — salts are fixed-seed hashes
+of the partial blobs.
 
 Sizing note for 100 TB: one CMS blob at (eps=1e-3, delta=1e-2) is
 d=5 x w=2719 x 8B ≈ 109 KB; per-batch-per-group emission keeps executor
@@ -29,7 +35,7 @@ memory at O(groups-per-batch x blob), independent of input rows.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 from typing import Callable, Iterator
 
 import numpy as np
@@ -331,92 +337,98 @@ def _merge_blobs(spec: SketchSpec, blobs) -> bytes:
     return acc.serialize()
 
 
-def sketch_by_key(df: DataFrame, group_cols: list[str], spec: SketchSpec,
-                  key_col: str | None = None, value_col: str | None = None,
-                  n_salt: int = 1, salt_seed: int = 7,
-                  key_expr: F.Column | None = None) -> DataFrame:
-    """-> DataFrame[group_cols..., sketch: binary] — one merged sketch per
+def _sketch_key(df: DataFrame, key_col: str) -> F.Column:
+    """The 64-bit sketch key of ``key_col``: string/binary keys are
 
-    group. String keys are hashed JVM-side (xxhash64) into the sketches'
-    64-bit key domain before Python ever sees them; pass ``key_expr`` to
-    override (e.g. md5_long60 for DuckDB-replayable parity sketches).
+    hashed JVM-side (xxhash64), anything else is cast to long. Every
+    builder, and every query that must find a sketched key again
+    (``queries.heavy_hitters``), goes through this one rule."""
+    kc = df.schema[key_col].dataType.simpleString()
+    return (F.xxhash64(F.col(key_col)) if kc in ("string", "binary")
+            else F.col(key_col).cast("long"))
+
+
+def _sketch_schema(frame: DataFrame, keys: list[str]) -> StructType:
+    return StructType([frame.schema[c] for c in keys]
+                      + [StructField("sketch", BinaryType())])
+
+
+def _head_row(pdf: pd.DataFrame, keys: list[str], blob: bytes) -> pd.DataFrame:
+    head = pdf.iloc[[0]][keys].copy()
+    head["sketch"] = [blob]
+    return head
+
+
+def _slim(df: DataFrame, gnames: list[str], spec: SketchSpec,
+          key_col: str | None, value_col: str | None,
+          key_expr: F.Column | None) -> DataFrame:
+    """The builders' prologue -> [gnames..., __key?, __val?, __w?]: the
+    group columns, the sketch key and the double value, then the spec's
+    JVM preagg BEFORE any Arrow transfer — a linear sketch only needs
+    (key, total weight), an idempotent one distinct keys, a
+    weight-mergeable value sketch (value, multiplicity). A preagg ends in
+    a deterministic keyed exchange, so narrow (single-row-group) inputs
+    are widened without changing any result (guide §2.5); raw paths
+    (t-digest/KLL/REQ ingestion) keep their partition-order-sensitive
+    input partitioning.
     """
-    if spec.needs_key:
-        assert key_col or key_expr is not None, f"{spec.kind} needs key_col"
+    if spec.needs_key and not key_col and key_expr is None:
+        raise ValueError(f"{spec.kind} needs key_col or key_expr")
     if spec.needs_value and value_col is None:
         raise ValueError(f"{spec.kind} needs value_col")
+    from mahout_spark.plans.scaleio import widen_partitions
 
-    cols = [F.col(c) for c in group_cols]
-    sel = list(cols)
+    sel = [F.col(c) for c in gnames]
     if key_expr is not None:
         sel.append(key_expr.cast("long").alias("__key"))
-        key_col = "__key"
     elif key_col:
-        kc = df.schema[key_col].dataType.simpleString()
-        key_expr = (F.xxhash64(F.col(key_col)) if kc in ("string", "binary")
-                    else F.col(key_col).cast("long"))
-        sel.append(key_expr.alias("__key"))
+        sel.append(_sketch_key(df, key_col).alias("__key"))
     if value_col:
         sel.append(F.col(value_col).cast("double").alias("__val"))
     slim = df.select(*sel)
-    gnames = list(group_cols)
-
-    # JVM map-side combine BEFORE any Arrow transfer: a linear sketch only
-    # needs (key, total weight); an idempotent sketch only needs distinct
-    # keys. At token-stream scale this shrinks the Python-bound data by
-    # orders of magnitude and is the direct analog of the reference's
-    # per-partition dense accumulators (SparkEngine.scala:44-82).
-    # A preagg path ends in a deterministic keyed exchange, so the scan's
-    # partitioning cannot affect results — widen narrow (single-row-group)
-    # inputs so the map side parallelizes (guide §2.5; no-op at scale).
-    # Raw paths (preagg=None: t-digest/KLL/REQ ingestion) keep their input
-    # partitioning: their results are partition-order sensitive.
-    from mahout_spark.plans.scaleio import widen_partitions
-
-    if spec.preagg == "sum" and key_col:
+    has_key = "__key" in slim.columns
+    if spec.preagg == "sum" and has_key:
         agg = (F.sum("__val") if value_col else
                F.count("*").cast("double")).alias("__val")
-        slim = widen_partitions(slim).groupBy(*gnames, "__key").agg(agg)
-    elif spec.preagg == "distinct" and key_col:
-        slim = widen_partitions(slim).select(*gnames, "__key").distinct()
-    elif spec.preagg == "value_sum" and value_col:
-        # value-sensitive but weight-mergeable (t-digest): collapse
-        # duplicate values JVM-side, feed weighted updates
-        slim = (widen_partitions(slim).groupBy(*gnames, "__val")
+        return widen_partitions(slim).groupBy(*gnames, "__key").agg(agg)
+    if spec.preagg == "distinct" and has_key:
+        return widen_partitions(slim).select(*gnames, "__key").distinct()
+    if spec.preagg == "value_sum" and value_col:
+        return (widen_partitions(slim).groupBy(*gnames, "__val")
                 .agg(F.count("*").cast("double").alias("__w")))
-    has_val = "__val" in slim.columns
-    has_wt = "__w" in slim.columns
+    return slim
 
-    out_fields = [slim.schema[g] for g in gnames]
-    partial_schema = StructType(out_fields + [StructField("sketch", BinaryType())])
 
+def _build_blob(spec: SketchSpec, pdf: pd.DataFrame) -> bytes:
+    """make -> update (or update_weighted) -> serialize over one group's
+    rows of a ``_slim`` frame."""
+    s = spec.make()
+    vals = pdf["__val"].to_numpy(dtype=np.float64) if "__val" in pdf else None
+    if "__w" in pdf:
+        spec.update_weighted(s, vals, pdf["__w"].to_numpy(dtype=np.float64))
+    else:
+        keys = (pdf["__key"].to_numpy(dtype=np.int64) if "__key" in pdf
+                else None)
+        spec.update(s, keys, vals)
+    return s.serialize()
+
+
+def _merged_partials(slim: DataFrame, gnames: list[str], spec: SketchSpec,
+                     n_salt: int = 1) -> DataFrame:
+    """sketch_by_key's body over a ``_slim`` frame: per-batch partials,
+    optional salted merge level, final per-group merge."""
     def build_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             rows = []
-            for gkey, sub in pdf.groupby(gnames, dropna=False, sort=False):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                s = spec.make()
-                keys = sub["__key"].to_numpy(dtype=np.int64) if key_col else None
-                vals = sub["__val"].to_numpy(dtype=np.float64) if has_val else None
-                if has_wt:
-                    spec.update_weighted(
-                        s, vals, sub["__w"].to_numpy(dtype=np.float64))
-                else:
-                    spec.update(s, keys, vals)
-                rows.append((*gkey, s.serialize()))
+            for g, sub in pdf.groupby(gnames, dropna=False, sort=False):
+                rows.append((*(g if isinstance(g, tuple) else (g,)),
+                             _build_blob(spec, sub)))
             yield pd.DataFrame(rows, columns=gnames + ["sketch"])
 
-    partials = slim.mapInPandas(build_partials, schema=partial_schema)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = _merge_blobs(spec, pdf["sketch"])
-        head = pdf.iloc[[0]][gnames].copy()
-        head["sketch"] = [blob]
-        return head
-
+    partials = slim.mapInPandas(build_partials,
+                                schema=_sketch_schema(slim, gnames))
     if n_salt > 1 and spec.kind in _EXACT_MERGE_KINDS:
         # The salt level exists to cap per-task merge fan-in (partial
         # blob count per group <= #partials partitions). For kinds whose
@@ -433,26 +445,43 @@ def sketch_by_key(df: DataFrame, group_cols: list[str], spec: SketchSpec,
         if nparts is not None and nparts <= 256:
             n_salt = 1
     if n_salt > 1:
-        # two-level treeAggregate: merge within salt buckets, then across
+        # two-level treeAggregate: merge within salt buckets (a seed-7
+        # hash of the blob), then across
         salted = partials.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col("sketch"), F.lit(salt_seed)),
+            "__salt", F.pmod(F.xxhash64(F.col("sketch"), F.lit(7)),
                              F.lit(n_salt)))
+        partials = merge_sketch_rows(salted, spec,
+                                     gnames + ["__salt"]).drop("__salt")
+    return merge_sketch_rows(partials, spec, gnames)
 
-        def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-            blob = _merge_blobs(spec, pdf["sketch"])
-            head = pdf.iloc[[0]][gnames + ["__salt"]].copy()
-            head["sketch"] = [blob]
-            return head
 
-        level1 = salted.groupBy(*gnames, "__salt").applyInPandas(
-            merge_salted, schema=StructType(
-                out_fields + [salted.schema["__salt"],
-                              StructField("sketch", BinaryType())]))
-        return level1.drop("__salt").groupBy(*gnames).applyInPandas(
-            merge_group, schema=partial_schema)
+def _per_group(slim: DataFrame, gnames: list[str],
+               spec: SketchSpec) -> DataFrame:
+    """sketch_per_group's body over a ``_slim`` frame."""
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _head_row(pdf, gnames, _build_blob(spec, pdf))
 
-    return partials.groupBy(*gnames).applyInPandas(merge_group,
-                                                   schema=partial_schema)
+    return slim.groupBy(*gnames).applyInPandas(
+        build, schema=_sketch_schema(slim, gnames))
+
+
+def sketch_by_key(df: DataFrame, group_cols: list[str], spec: SketchSpec,
+                  key_col: str | None = None, value_col: str | None = None,
+                  n_salt: int = 1,
+                  key_expr: F.Column | None = None) -> DataFrame:
+    """-> DataFrame[group_cols..., sketch: binary] — one merged sketch per
+
+    group. String keys are hashed JVM-side (xxhash64) into the sketches'
+    64-bit key domain before Python ever sees them; pass ``key_expr`` to
+    override (e.g. md5_long60 for DuckDB-replayable parity sketches).
+    ``n_salt > 1`` inserts the salted merge level (salt = a fixed-seed
+    hash of the partial blob, so retries see the same salts); it is
+    skipped for exact-merge kinds when the partials' fan-in is small.
+    """
+    gnames = list(group_cols)
+    return _merged_partials(
+        _slim(df, gnames, spec, key_col, value_col, key_expr), gnames,
+        spec, n_salt)
 
 
 def sketch_per_group(df: DataFrame, group_cols: list[str], spec: SketchSpec,
@@ -465,49 +494,11 @@ def sketch_per_group(df: DataFrame, group_cols: list[str], spec: SketchSpec,
     two-phase ``sketch_by_key`` shape is for FEW groups over massive
     streams, where per-partition partials + salted merges pay off; here a
     group fits one task, so partials would only multiply blob traffic.
-    JVM pre-aggregation still applies before the group shuffle.
+    The same JVM pre-aggregation still applies before the group shuffle.
     """
-    if spec.needs_key:
-        assert key_col or key_expr is not None
-
     gnames = list(group_cols)
-    sel = [F.col(c) for c in gnames]
-    if key_expr is not None:
-        sel.append(key_expr.cast("long").alias("__key"))
-        key_col = "__key"
-    elif key_col:
-        kc = df.schema[key_col].dataType.simpleString()
-        ke = (F.xxhash64(F.col(key_col)) if kc in ("string", "binary")
-              else F.col(key_col).cast("long"))
-        sel.append(ke.alias("__key"))
-    if value_col:
-        sel.append(F.col(value_col).cast("double").alias("__val"))
-    slim = df.select(*sel)
-    # see sketch_by_key: preagg outputs are partition-independent, so a
-    # narrow scan can be widened without changing any result
-    from mahout_spark.plans.scaleio import widen_partitions
-
-    if spec.preagg == "sum" and key_col:
-        agg = (F.sum("__val") if value_col else
-               F.count("*").cast("double")).alias("__val")
-        slim = widen_partitions(slim).groupBy(*gnames, "__key").agg(agg)
-    elif spec.preagg == "distinct" and key_col:
-        slim = widen_partitions(slim).select(*gnames, "__key").distinct()
-    has_val = "__val" in slim.columns
-
-    out_fields = [slim.schema[g] for g in gnames]
-    schema = StructType(out_fields + [StructField("sketch", BinaryType())])
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = spec.make()
-        keys = pdf["__key"].to_numpy(dtype=np.int64) if key_col else None
-        vals = pdf["__val"].to_numpy(dtype=np.float64) if has_val else None
-        spec.update(s, keys, vals)
-        head = pdf.iloc[[0]][gnames].copy()
-        head["sketch"] = [s.serialize()]
-        return head
-
-    return slim.groupBy(*gnames).applyInPandas(build, schema=schema)
+    return _per_group(_slim(df, gnames, spec, key_col, value_col, key_expr),
+                      gnames, spec)
 
 
 def sketch_per_group_skewed(df: DataFrame, group_cols: list[str],
@@ -538,50 +529,15 @@ def sketch_per_group_skewed(df: DataFrame, group_cols: list[str],
     # split: the heavy/tail branches are two consumers, and without the
     # pin each would re-execute the whole upstream (explode + joins) —
     # measured as a serial +35% on the flagship job. After preagg the
-    # frame is (group, key, weight)-sized, cheap to store; feeding the
-    # preagg'd weights back through value_col reproduces the exact same
-    # sketch updates.
+    # frame is (group, key, weight)-sized, cheap to store, and both
+    # branches build straight from it.
     gnames = list(group_cols)
-    sel = [F.col(c) for c in gnames]
-    if key_expr is not None:
-        sel.append(key_expr.cast("long").alias("__key"))
-    elif key_col:
-        kc = df.schema[key_col].dataType.simpleString()
-        ke = (F.xxhash64(F.col(key_col)) if kc in ("string", "binary")
-              else F.col(key_col).cast("long"))
-        sel.append(ke.alias("__key"))
-    if value_col:
-        sel.append(F.col(value_col).cast("double").alias("__val"))
-    slim = df.select(*sel)
-    has_key = "__key" in slim.columns
-    # see sketch_by_key: preagg outputs are partition-independent, so a
-    # narrow scan can be widened without changing any result
-    from mahout_spark.plans.scaleio import widen_partitions
-
-    if spec.preagg == "sum" and has_key:
-        agg = (F.sum("__val") if value_col else
-               F.count("*").cast("double")).alias("__val")
-        slim = widen_partitions(slim).groupBy(*gnames, "__key").agg(agg)
-        feed_val = "__val"
-    elif spec.preagg == "distinct" and has_key:
-        slim = widen_partitions(slim).select(*gnames, "__key").distinct()
-        feed_val = None
-    else:
-        feed_val = "__val" if value_col else None
-    slim = slim.localCheckpoint(eager=False)
-
-    heavy = F.broadcast(heavy_groups.select(*group_cols).distinct())
-    head = slim.join(heavy, gnames)
-    tail = slim.join(heavy, gnames, "left_anti")
-    ke = F.col("__key") if has_key else None
-    # the data is already preagg'd — hand the branches a preagg=None spec
-    # copy so neither re-shuffles for an idempotent second aggregation
-    spec_raw = replace(spec, preagg=None)
-    a = sketch_by_key(head, gnames, spec_raw, key_expr=ke,
-                      value_col=feed_val)
-    b = sketch_per_group(tail, gnames, spec_raw, key_expr=ke,
-                         value_col=feed_val)
-    return a.unionByName(b)
+    slim = _slim(df, gnames, spec, key_col, value_col,
+                 key_expr).localCheckpoint(eager=False)
+    heavy = F.broadcast(heavy_groups.select(*gnames).distinct())
+    head = _merged_partials(slim.join(heavy, gnames), gnames, spec)
+    tail = _per_group(slim.join(heavy, gnames, "left_anti"), gnames, spec)
+    return head.unionByName(tail)
 
 
 def cms_per_group_bucketed(df: DataFrame, group_cols: list[str], depth: int,
@@ -602,9 +558,7 @@ def cms_per_group_bucketed(df: DataFrame, group_cols: list[str], depth: int,
     Byte-identical to ``sketch_per_group(df, ..., cms_spec_shape(depth,
     width, seed, family="xxh"), key_col=...)`` (pytest-pinned).
     """
-    kc = df.schema[key_col].dataType.simpleString()
-    key = (F.xxhash64(F.col(key_col)) if kc in ("string", "binary")
-           else F.col(key_col).cast("long"))
+    key = _sketch_key(df, key_col)
     gnames = list(group_cols)
     # stage 1: collapse the raw stream to (group, key) weights FIRST
     # (map-side combine does most of it before any shuffle) — the x depth
@@ -632,9 +586,6 @@ def cms_per_group_bucketed(df: DataFrame, group_cols: list[str], depth: int,
     cells = (ex.groupBy(*gnames, "__d", "__b")
              .agg(F.sum("__w").alias("__w")))
 
-    out_fields = [cells.schema[g] for g in gnames]
-    schema = StructType(out_fields + [StructField("sketch", BinaryType())])
-
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         counts = np.zeros((depth, width))
         counts[pdf["__d"].to_numpy(dtype=np.int64),
@@ -642,11 +593,10 @@ def cms_per_group_bucketed(df: DataFrame, group_cols: list[str], depth: int,
             pdf["__w"].to_numpy(dtype=np.float64)
         s = CountMinSketch(depth=depth, width=width, seed=seed,
                            counts=counts, family="xxh")
-        head = pdf.iloc[[0]][gnames].copy()
-        head["sketch"] = [s.serialize()]
-        return head
+        return _head_row(pdf, gnames, s.serialize())
 
-    return cells.groupBy(*gnames).applyInPandas(build, schema=schema)
+    return cells.groupBy(*gnames).applyInPandas(
+        build, schema=_sketch_schema(cells, gnames))
 
 
 def merge_sketch_rows(sketch_df: DataFrame, spec: SketchSpec,
@@ -663,14 +613,10 @@ def merge_sketch_rows(sketch_df: DataFrame, spec: SketchSpec,
     keys = gnames or ["__g"]
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        blob = _merge_blobs(spec, pdf["sketch"])
-        head = pdf.iloc[[0]][keys].copy()
-        head["sketch"] = [blob]
-        return head
+        return _head_row(pdf, keys, _merge_blobs(spec, pdf["sketch"]))
 
-    schema = StructType([src.schema[c] for c in keys]
-                        + [StructField("sketch", BinaryType())])
-    out = src.groupBy(*keys).applyInPandas(merge, schema=schema)
+    out = src.groupBy(*keys).applyInPandas(merge,
+                                           schema=_sketch_schema(src, keys))
     return out if gnames else out.drop("__g")
 
 

@@ -703,7 +703,7 @@ def heavy_hitters(df: DataFrame, key_col: str, threshold_frac: float,
 
     Returns (key_col, n | weight) filtered by strict >."""
     from ..core.spacesaving import MisraGries
-    from .agg import mg_spec, sketch_global
+    from .agg import _sketch_key, mg_spec, sketch_global
 
     if eps is None:
         eps = threshold_frac / 2.0
@@ -715,9 +715,7 @@ def heavy_hitters(df: DataFrame, key_col: str, threshold_frac: float,
     n_total = mg.n_total
     cand = mg.candidates(threshold_frac * n_total)
 
-    kc = df.schema[key_col].dataType.simpleString()
-    hash_expr = (F.xxhash64(F.col(key_col)) if kc in ("string", "binary")
-                 else F.col(key_col).cast("long"))
+    hash_expr = _sketch_key(df, key_col)
     agg = (F.sum(F.col(value_col).cast("double")).alias("weight")
            if value_col else F.count("*").alias("n"))
     out_col = "weight" if value_col else "n"

@@ -24,11 +24,10 @@ from __future__ import annotations
 import json
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import BinaryType, StructField, StructType
 
-from mahout_spark.sketch.agg import SketchSpec, _merge_blobs, sketch_by_key
+from mahout_spark.sketch.agg import (SketchSpec, merge_sketch_rows,
+                                     sketch_by_key)
 
 
 def _meta_path(store_dir: str) -> str:
@@ -80,19 +79,9 @@ def incremental_sketch_stream(spark: SparkSession, source_dir: str,
         if meta["batch_id"] >= 0:
             prev = batch_df.sparkSession.read.parquet(
                 os.path.join(store_dir, meta["gen"]))
-        merged_src = partials if prev is None else partials.unionByName(prev)
-
-        gnames = list(group_cols)
-        fields = [merged_src.schema[g] for g in gnames]
-        out_schema = StructType(fields + [StructField("sketch", BinaryType())])
-
-        def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            head = pdf.iloc[[0]][gnames].copy()
-            head["sketch"] = [_merge_blobs(spec, pdf["sketch"])]
-            return head
-
-        merged = merged_src.groupBy(*gnames).applyInPandas(
-            merge_group, schema=out_schema)
+        merged = merge_sketch_rows(
+            partials if prev is None else partials.unionByName(prev), spec,
+            group_cols)
         next_gen = "state_b" if meta["gen"] == "state_a" else "state_a"
         merged.write.mode("overwrite").parquet(
             os.path.join(store_dir, next_gen))

@@ -111,6 +111,38 @@ def test_rowsim_loglikelihood_equals_llr_item_similarity(spark):
     assert any(v > 0 for v in llr.values())
 
 
+def test_rowsim_loglikelihood_column_count_reads_the_pin(spark):
+    """Without ``n_cols`` the LLR measure counts distinct columns; that
+    action must run on the pinned preprocessing, so one call computes its
+    input once. Counting the count before the pin ran the input twice
+    (960 rows for 480) and 17 jobs instead of 15 in one job group."""
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def gen(batches):
+        import pandas as pd
+
+        for b in batches:
+            seen.add(len(b))
+            i = b["id"].to_numpy()
+            yield pd.DataFrame({"row_id": i // 8, "col_id": (i * 7919) % 40,
+                                "value": (i % 5 + 1).astype(float)})
+
+    triples = spark.range(480, numPartitions=4).mapInPandas(
+        gen, "row_id long, col_id long, value double")
+    group = "test_rowsim_llr_column_count"
+    sc.setJobGroup(group, group)
+    try:
+        n = row_similarity(triples, "loglikelihood", k=5).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.catalog.clearCache()
+    assert n > 0
+    assert seen.value == 480
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 15
+
+
 F2_LINES = """u1,purchase,iphone
 u1,purchase,ipad
 u2,purchase,nexus

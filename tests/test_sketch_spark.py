@@ -314,21 +314,21 @@ class TestOtherSketches:
                                   args=(q,)).collect()[0]["qv"]
                 assert abs(got - want) / span < 0.02, (spec.kind, q, got, want)
 
-    def test_tdigest_value_dedup_preagg_within_bound(self, spark):
+    @pytest.mark.parametrize("builder", ["sketch_by_key",
+                                         "sketch_per_group"])
+    def test_tdigest_value_dedup_preagg_within_bound(self, spark, builder):
         # the 'value_sum' JVM preagg (duplicate values collapsed, weighted
         # centroid updates) must stay inside the same rank-error envelope
-        # as the raw-order build
-        import numpy as np
-
-        from mahout_spark.sketch.agg import sketch_by_key, tdigest_spec
-        from mahout_spark.sketch.queries import sketch_eval
+        # as the raw-order build, in both the two-phase and the per-group
+        # builder
+        from mahout_spark.sketch import agg
 
         vals = np.concatenate([np.repeat(np.arange(100), 50),
                                np.arange(1000)]).astype(float)
         df = spark.createDataFrame([(float(v),) for v in vals], "v double") \
             .withColumn("g", F.lit(0))
         spec = tdigest_spec(100.0, dedup_values=True)
-        sk = sketch_by_key(df, ["g"], spec, value_col="v")
+        sk = getattr(agg, builder)(df, ["g"], spec, value_col="v")
         for q in (0.1, 0.5, 0.9):
             est = sketch_eval(sk, spec, "quantile", "qv",
                               args=(q,)).collect()[0]["qv"]
@@ -360,32 +360,50 @@ class TestOtherSketches:
         assert n_missing == 0
 
 
-def test_sketch_per_group_skewed_byte_identical(spark):
+@pytest.mark.parametrize("case", ["key_col", "value_col", "key_expr"])
+def test_sketch_per_group_skewed_byte_identical(spark, case):
     # the skew-hybrid (heavy groups via partitioned partials) must produce
-    # byte-identical CMS blobs to the one-task-per-group build
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from mahout_spark.core.cms import CountMinSketch
-    from mahout_spark.sketch.agg import (cms_spec_shape, sketch_per_group,
+    # byte-identical CMS blobs to the one-task-per-group build and to the
+    # two-phase build: one prologue (key hash, value cast, preagg) feeds
+    # all three, whatever the key/value arguments
+    from mahout_spark.sketch.agg import (sketch_per_group,
                                          sketch_per_group_skewed)
 
     rng = np.random.default_rng(4)
-    # zipfy groups: g0 holds half the rows
+    # zipfy groups: g0 holds half the rows; integer weights keep every
+    # float sum exact under any merge order
     rows = []
     for i in range(4000):
         g = "g0" if i % 2 == 0 else f"g{1 + (i % 7)}"
-        rows.append((g, int(rng.integers(0, 500))))
-    df = spark.createDataFrame(rows, ["grp", "key"]).repartition(8)
+        rows.append((g, int(rng.integers(0, 500)),
+                     float(rng.integers(1, 6))))
+    df = spark.createDataFrame(rows, ["grp", "key", "w"]).repartition(8)
     spec = cms_spec_shape(4, 256, seed=3)
     heavy = spark.createDataFrame([("g0",)], ["grp"])
-    plain = {r["grp"]: bytes(r["sketch"]) for r in
-             sketch_per_group(df, ["grp"], spec, key_col="key").collect()}
-    skewed = {r["grp"]: bytes(r["sketch"]) for r in
-              sketch_per_group_skewed(df, ["grp"], spec, heavy,
-                                      key_col="key").collect()}
-    assert plain.keys() == skewed.keys()
-    for g in plain:
-        a = CountMinSketch.deserialize(plain[g])
-        b = CountMinSketch.deserialize(skewed[g])
-        assert np.array_equal(a.counts, b.counts), g
+    kw = {"key_col": dict(key_col="key"),
+          "value_col": dict(key_col="key", value_col="w"),
+          "key_expr": dict(key_expr=md5_long60(F.col("key").cast("string")))
+          }[case]
+
+    def blobs(out):
+        return {r["grp"]: bytes(r["sketch"]) for r in out.collect()}
+
+    plain = blobs(sketch_per_group(df, ["grp"], spec, **kw))
+    assert len(plain) == 8
+    assert blobs(sketch_per_group_skewed(df, ["grp"], spec, heavy,
+                                         **kw)) == plain
+    assert blobs(sketch_by_key(df, ["grp"], spec, n_salt=1, **kw)) == plain
+
+
+@pytest.mark.parametrize("builder", ["sketch_by_key", "sketch_per_group",
+                                     "sketch_per_group_skewed"])
+def test_builders_reject_a_missing_key(spark, builder):
+    # a ValueError at plan time, not an assert (stripped by python -O)
+    # that resurfaces as a KeyError inside a Python worker
+    from mahout_spark.sketch import agg
+
+    df = spark.createDataFrame([("a", 1)], ["grp", "key"])
+    args = ([df.select("grp")] if builder == "sketch_per_group_skewed"
+            else [])
+    with pytest.raises(ValueError, match="cms needs key_col"):
+        getattr(agg, builder)(df, ["grp"], cms_spec(), *args)
