@@ -132,7 +132,8 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str, num_perm: int,
     are dropped (boilerplate guard) — deterministic, documented cap.
     """
     rows = num_perm // bands
-    assert bands * rows == num_perm, "bands must divide num_perm"
+    if bands * rows != num_perm:
+        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
     band_rows = []
     for b in range(bands):
         cols = [F.col(f"sig_{b * rows + r}").cast("string")

@@ -29,14 +29,14 @@ estimator is the unbiased middle.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mahout_spark.core.countsketch import CountSketch
+from mahout_spark.functions.hashutil import md5_long60_sql
 from mahout_spark.sketch.agg import countsketch_spec_shape, sketch_by_key
+from mahout_spark.sketch.queries import _blob_pairs, countsketch_bucket_cte
 
 
 def _side_sketch(df: DataFrame, key: str, spec,
@@ -73,25 +73,15 @@ def join_size_estimate(df_a: DataFrame, key_a: str,
         .withColumnRenamed("sketch", "__sa")
     b = _side_sketch(df_b, key_b, spec, key_expr_b, n_salt) \
         .withColumnRenamed("sketch", "__sb")
-    joined = a.crossJoin(F.broadcast(b))
-    schema = ("join_size_est double, f2_a double, f2_b double, "
-              "err_bound double")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for sa, sb in zip(pdf["__sa"], pdf["__sb"]):
-                ca = CountSketch.deserialize(bytes(sa))
-                cb = CountSketch.deserialize(bytes(sb))
-                f2a, f2b = ca.f2(), cb.f2()
-                rows.append((ca.inner_product(cb), f2a, f2b,
-                             eps * math.sqrt(f2a * f2b)))
-            yield pd.DataFrame(rows, columns=["join_size_est", "f2_a",
-                                              "f2_b", "err_bound"])
+    def estimate(sa: bytes, sb: bytes) -> tuple:
+        ca, cb = CountSketch.deserialize(sa), CountSketch.deserialize(sb)
+        f2a, f2b = ca.f2(), cb.f2()
+        return (ca.inner_product(cb), f2a, f2b, eps * math.sqrt(f2a * f2b))
 
-    return joined.mapInPandas(run, schema=schema)
+    return _blob_pairs(a.crossJoin(F.broadcast(b)), [], estimate,
+                       "join_size_est double, f2_a double, f2_b double, "
+                       "err_bound double")
 
 
 def exact_join_size(df_a: DataFrame, key_a: str | Column,
@@ -122,10 +112,6 @@ def countsketch_join_size_oracle_sql(src_a: str, src_b: str, depth: int,
     medians; the two sqrt/multiply steps are IEEE-exact per float op),
     hence hash-exact.
     """
-    from mahout_spark.functions.hashutil import md5_long60_sql
-    from mahout_spark.sketch.queries import (_bucket_expr,
-                                             countsketch_bucket_cte)
-
     eps = math.sqrt(3.0 / width)
     keyed = (f"SELECT s AS g, k, count(*) AS c FROM ("
              f"SELECT 'a' AS s, {md5_long60_sql('token')} AS k "

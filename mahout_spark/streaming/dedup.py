@@ -55,8 +55,16 @@ def rowlocal_minhash_sigs(docs: DataFrame, id_col: str, text_col: str,
     doc's DISTINCT shingles of xxhash64(shingle, perm_seed) ('fast') or
     the affine permutations of the md5-derived 60-bit key ('parity' —
     the DuckDB-replayable family the streaming gate uses)."""
-    sh = F.array_distinct(shingles_from_tokens(
-        tokens_array(F.col(text_col)), shingle_n))
+    # project the tokens, then the distinct shingles, once: inlined into
+    # each of the num_perm transforms they would be recomputed per
+    # permutation. A doc with fewer than shingle_n tokens has no shingles,
+    # hence no signature.
+    toks = docs.select(F.col(id_col).alias("doc_id"),
+                       tokens_array(F.col(text_col)).alias("__t"))
+    docs = (toks.filter(F.size("__t") >= shingle_n)
+            .select("doc_id", F.array_distinct(shingles_from_tokens(
+                F.col("__t"), shingle_n)).alias("__sh")))
+    sh = F.col("__sh")
 
     def perm(i):
         # single-parameter closure: a 2-arg lambda would make
@@ -71,17 +79,16 @@ def rowlocal_minhash_sigs(docs: DataFrame, id_col: str, text_col: str,
                                                      md5_long60,
                                                      minhash_params)
         params = minhash_params(num_perm, seed)
-        hs = F.transform(sh, lambda s: md5_long60(s))
+        docs = docs.select("doc_id", F.transform(
+            sh, lambda s: md5_long60(s)).alias("__hs"))
+        hs = F.col("__hs")
 
         def aff(a, b):
             return lambda h: affine_minhash(h, a, b)
 
         sigs = F.array(*[F.array_min(F.transform(hs, aff(a, b)))
                          for a, b in params])
-    return (docs.select(F.col(id_col).alias("doc_id"),
-                        sigs.alias("sigs"))
-            .filter(F.size(F.col("sigs")) > 0)
-            .filter(F.col("sigs")[0].isNotNull()))
+    return docs.select("doc_id", sigs.alias("sigs"))
 
 
 def streaming_minhash_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -100,7 +107,8 @@ def streaming_minhash_pairs(docs: DataFrame, id_col: str = "doc_id",
     resolution).
     """
     rows = num_perm // bands
-    assert bands * rows == num_perm, "bands must divide num_perm"
+    if bands * rows != num_perm:
+        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
     sigs = rowlocal_minhash_sigs(docs, id_col, text_col, num_perm,
                                  shingle_n, seed, family=family)
     band_frames = []

@@ -137,17 +137,29 @@ def test_section_schedule_refines():
     assert c0.section_size < 32
 
 
-def test_distributed_build_within_relative_windows(spark):
-    from mahout_spark.sketch.agg import req_spec, sketch_by_key
-    from mahout_spark.sketch.queries import relative_quantile_bound_check
+@pytest.mark.parametrize("window", ["relative", "additive"])
+def test_distributed_build_within_relative_windows(spark, window):
+    """REQ against relative (HRA) rank windows; KLL against the additive
+    windows of the same rank-window check."""
+    from mahout_spark.sketch.agg import kll_spec, req_spec, sketch_by_key
+    from mahout_spark.sketch.queries import (quantile_bound_check,
+                                             relative_quantile_bound_check)
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    spec = req_spec(32, seed=5)
-    sk = sketch_by_key(ev, ["event_type"], spec, value_col="value")
-    out = relative_quantile_bound_check(
-        sk, spec, ev, ["event_type"], "value",
-        [0.5, 0.9, 0.99, 0.999], rel_eps=0.1).collect()
-    assert len(out) > 0
+    qs = [0.5, 0.9, 0.99, 0.999]
+    if window == "relative":
+        spec = req_spec(32, seed=5)
+        sk = sketch_by_key(ev, ["event_type"], spec, value_col="value")
+        out = relative_quantile_bound_check(
+            sk, spec, ev, ["event_type"], "value", qs, rel_eps=0.1)
+    else:
+        spec = kll_spec(200, seed=5)
+        sk = sketch_by_key(ev, ["event_type"], spec, value_col="value")
+        out = quantile_bound_check(sk, spec, ev, ["event_type"], "value",
+                                   qs, eps=0.03)
+    out = out.collect()
+    n_groups = ev.select("event_type").distinct().count()
+    assert len(out) == n_groups * len(qs)
     assert all(r["within"] for r in out)
 
 

@@ -18,13 +18,15 @@ from pyspark.sql import functions as F
 from mahout_spark.functions.hashutil import md5_long60
 from mahout_spark.functions.text import explode_tokens, tokens_array_sql
 from mahout_spark.sketch.agg import (bloom_spec, cms_spec, cms_spec_shape,
-                                     hll_spec, kll_spec, sketch_by_key,
-                                     sketch_global, tdigest_spec)
+                                     countsketch_spec_shape, hll_spec,
+                                     kll_spec, sketch_by_key, sketch_global,
+                                     tdigest_spec)
 from mahout_spark.sketch.queries import (bloom_contains_lookup,
                                          cms_pairwise,
                                          cms_pairwise_oracle_sql,
                                          cms_point_lookup,
-                                         cms_point_oracle_sql, sketch_eval)
+                                         cms_point_oracle_sql,
+                                         countsketch_pairwise, sketch_eval)
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 TOKSRC = (f"SELECT unnest({tokens_array_sql('text')}) AS token, lang "
@@ -90,6 +92,24 @@ class TestParityCMSvsDuckDB:
             drop=True)
         assert (got["cms_inner"].to_numpy()
                 == want["cms_inner"].to_numpy()).all()
+
+    def test_countsketch_pairwise_equals_kernel_inner_product(self, tokens):
+        from itertools import combinations
+
+        from mahout_spark.core.countsketch import CountSketch
+
+        spec = countsketch_spec_shape(5, self.WIDTH, self.SEED,
+                                      family="parity")
+        sk = sketch_by_key(tokens, ["lang"], spec,
+                           key_expr=md5_long60(F.col("token"))).cache()
+        cs = {r["lang"]: CountSketch.deserialize(bytes(r["sketch"]))
+              for r in sk.collect()}
+        got = {(r["a"], r["b"]): r["cs_inner"]
+               for r in countsketch_pairwise(sk, "lang").collect()}
+        sk.unpersist()
+        want = {(a, b): cs[a].inner_product(cs[b])
+                for a, b in combinations(sorted(cs), 2)}
+        assert len(cs) > 1 and got == want
 
 
 class TestFastCMS:

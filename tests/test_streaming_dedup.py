@@ -31,6 +31,8 @@ def docs(spark):
 
 
 def test_rowlocal_sigs_match_batch(spark, docs):
+    # a doc shorter than one shingle has no signature on either path
+    docs = docs.union(spark.createDataFrame([(7, "too short")], docs.schema))
     batch = minhash_signatures(docs, "doc_id", "text", num_perm=16,
                                shingle_n=3, seed=1, family="fast")
     row = rowlocal_minhash_sigs(docs, "doc_id", "text", num_perm=16,
@@ -117,3 +119,28 @@ def test_rowlocal_parity_family_matches_batch(spark, docs):
          for r in batch.collect()}
     a = {r["doc_id"]: list(r["sigs"]) for r in row.collect()}
     assert a == b
+
+
+@pytest.mark.parametrize("family", ["fast", "parity"])
+def test_rowlocal_sigs_build_shingles_once(docs, family):
+    """The tokens and the distinct shingle array are projected once, not
+    re-derived inside each permutation's transform."""
+    def n_distinct(num_perm):
+        sigs = rowlocal_minhash_sigs(docs, "doc_id", "text",
+                                     num_perm=num_perm, family=family)
+        plan = sigs._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("array_distinct(")
+
+    assert n_distinct(4) == n_distinct(16)
+
+
+@pytest.mark.parametrize("pairs", [
+    lambda docs: lsh_candidate_pairs(
+        minhash_signatures(docs, "doc_id", "text", num_perm=16),
+        "doc_id", num_perm=16, bands=3),
+    lambda docs: streaming_minhash_pairs(docs, num_perm=16, bands=3),
+], ids=["lsh_candidate_pairs", "streaming_minhash_pairs"])
+def test_bands_must_divide_num_perm(docs, pairs):
+    # a check that `python -O` keeps: 3 bands of 5 rows would drop sig_15
+    with pytest.raises(ValueError, match="must divide"):
+        pairs(docs)
