@@ -2,9 +2,10 @@
 
 flagship path (SURVEY.md §3.3), as three DataFrame stages:
 
-1. per-user CMS profiles: ``groupBy(user).applyInPandas(build_cms)``
+1. per-user CMS profiles: ``sketch_per_group`` over (user, item, pref)
    (mirrors CosineCM.exportProfile, CosineCM.java:41-58 — replaying the
-   user's (item, pref) pairs through cm.update);
+   user's (item, pref) pairs through cm.update), one batched Python pass
+   per Arrow batch;
 2. pairwise user similarity: CMS cosine over sketch pairs (CosineCM.java:
    84-96 → DoubleCountMinSketch.cosine) or the exact Taste measures
    (AbstractSimilarity.java:110-223) as a join+agg oracle;
@@ -12,9 +13,10 @@ flagship path (SURVEY.md §3.3), as three DataFrame stages:
    preference estimate = similarity-weighted average of neighbor prefs
    (GenericUserBasedRecommender.doEstimatePreference:134-184); in CMS mode
    the neighbor pref is the CMS point query cm.get(item) with 0 treated
-   as missing (:156-158), run once per rated (user, item) BEFORE the
-   neighborhood fan-out; estimates capped to the preference range and
-   required to have >= min_evidence data points (:176-178). An estimate
+   as missing (:156-158), run for each rated (user, item) BEFORE the
+   neighborhood fan-out, one Python row (and one blob) per rated user;
+   estimates capped to the preference range and required to have >=
+   min_evidence data points (:176-178). An estimate
    whose similarities sum to 0 is skipped (the reference's NaN, which
    TopItems and the evaluators skip).
 
@@ -35,7 +37,7 @@ from pyspark.sql import functions as F
 from mahout_spark.operators.rescorer import (IDRescorer, apply_rescorer,
                                              filter_candidates)
 from mahout_spark.operators.topk import global_topk, topk_per_group
-from mahout_spark.sketch.agg import cms_spec_shape, sketch_by_key
+from mahout_spark.sketch.agg import cms_spec_shape, sketch_per_group
 from mahout_spark.sketch.queries import cms_pairwise
 
 
@@ -48,10 +50,14 @@ def user_cms_profiles(prefs: DataFrame, depth: int = 5, width: int = 272,
     Equal (depth, width, seed) across users so cosine is defined
     (CosineCM builds cm1 with cm2's config, CosineCM.java:69-82).
     ``parity=True`` uses the reference's affine hash family so the whole
-    recommend pipeline is DuckDB-replayable (gate oracle).
+    recommend pipeline is DuckDB-replayable (gate oracle). Built by
+    ``sketch_per_group``, the many-small-groups builder: one Python pass
+    per Arrow batch over the user-clustered (user, item, pref) rows, no
+    partial blobs and no merge stage.
     """
     spec = cms_spec_shape(depth, width, seed, parity=parity)
-    return (sketch_by_key(prefs, [user], spec, key_col=item, value_col=pref)
+    return (sketch_per_group(prefs, [user], spec, key_col=item,
+                             value_col=pref)
             .withColumnRenamed(user, "user_id"))
 
 
@@ -292,8 +298,9 @@ def recommend_cms(prefs: DataFrame, profiles: DataFrame,
     neighbors' interaction lists, but the neighbor's preference VALUE is
     the CMS point query ``cm.get(itemID)`` against the neighbor's sketch
     (0 ⇒ treated as missing, :156-158). The estimate depends on (neighbor,
-    item) only, never on the target, so the CMS lookup (Arrow batch) runs
-    once per rated (user, item) BEFORE the neighborhood fan-out; the
+    item) only, never on the target, so the CMS lookup runs once per rated
+    (user, item) BEFORE the neighborhood fan-out — one Python row per
+    rated user, carrying its items and its sketch once; the
     fan-out, the seen/rescorer filters and the similarity-weighted
     average are plain SQL. Items whose similarities sum to 0 are skipped.
     """

@@ -9,13 +9,21 @@ builders (``sketch_by_key``, ``sketch_per_group``,
       sketch-key rule (``_sketch_key``) or an explicit ``key_expr``, then
       the spec's JVM preagg ('sum' / 'distinct' / 'value_sum').
 
-  build (``_build_blob``): make -> update | update_weighted -> serialize.
-      ``sketch_by_key`` runs it per Arrow batch and group in
-      ``mapInPandas`` — a map-side combine, so the shuffle carries only
-      #batches x #groups blobs, never raw rows (the reference's
-      per-partition dense accumulators, SparkEngine.scala:44-82, and
-      AtA's map-side combine, blas/AtA.scala:203-220);
-      ``sketch_per_group`` runs it once per group in ``applyInPandas``.
+  build: CMS specs (the fast, parity and xxh families) go through one
+      batched kernel (``_cms_blobs``): a ``mapInArrow`` pass that, per
+      Arrow batch, gives every row a group id, hashes every key once and
+      scatter-adds all groups' counters with ``np.add.at`` in row order —
+      byte-identical to one ``update_batch`` per group. Other kinds run
+      ``_build_blob`` (make -> update | update_weighted -> serialize).
+      ``sketch_by_key`` builds one partial per Arrow batch and group — a
+      map-side combine, so the shuffle carries only #batches x #groups
+      blobs, never raw rows (the reference's per-partition dense
+      accumulators, SparkEngine.scala:44-82, and AtA's map-side combine,
+      blas/AtA.scala:203-220). ``sketch_per_group`` builds each group
+      whole: for CMS it clusters and sorts the rows by group (the Exchange
+      + Sort ``applyInPandas`` would plan) and runs the same kernel,
+      emitting a group once the next one starts; other kinds run
+      ``_build_blob`` once per group in ``applyInPandas``.
 
   merge (``merge_sketch_rows``): ``applyInPandas`` per group key merges
       blobs associatively. ``n_salt > 1`` inserts a salted level
@@ -30,7 +38,8 @@ of the partial blobs.
 
 Sizing note for 100 TB: one CMS blob at (eps=1e-3, delta=1e-2) is
 d=5 x w=2719 x 8B ≈ 109 KB; per-batch-per-group emission keeps executor
-memory at O(groups-per-batch x blob), independent of input rows.
+memory at O(groups-per-batch x blob), independent of input rows, and the
+batched CMS kernel holds at most ``_SCATTER_CELLS`` counters (32 MB) at once.
 """
 
 from __future__ import annotations
@@ -40,6 +49,8 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, StructField, StructType)
@@ -323,6 +334,10 @@ SKETCH_SPECS = {"cms": cms_spec, "hll": hll_spec, "bloom": bloom_spec,
                 "req": req_spec}
 
 
+# counters one scatter pass allocates (32 MB of float64): a batch of many
+# small groups is built in slices of groups, never all at once
+_SCATTER_CELLS = 1 << 22
+
 # kinds whose merge result is byte-identical under any merge tree
 # (counter/register/set semantics; priority sampling is an order
 # statistic of the union) — see sketch_by_key's adaptive salt skip
@@ -413,6 +428,98 @@ def _build_blob(spec: SketchSpec, pdf: pd.DataFrame) -> bytes:
     return s.serialize()
 
 
+def _group_codes(cols: list) -> np.ndarray:
+    """One int64 group id per row of the Arrow group columns ``cols``:
+    rows share an id iff their key tuples are equal, NULL equal to NULL
+    (Spark's grouping). Ids are dense: 0 .. #groups - 1."""
+    codes = None
+    for col in cols:
+        enc = pc.dictionary_encode(col, null_encoding="encode")
+        idx = enc.indices.to_numpy().astype(np.int64)
+        codes = idx if codes is None else np.unique(
+            codes * len(enc.dictionary) + idx, return_inverse=True)[1]
+    return codes
+
+
+def _cms_scatter(proto: CountMinSketch, keys: np.ndarray, incs: np.ndarray,
+                 codes: np.ndarray, n_groups: int,
+                 carry: np.ndarray | None = None):
+    """-> (g0, counters) slices, each at most ``_SCATTER_CELLS`` counters,
+    covering groups 0..n_groups-1: row i's key scatter-added into group
+    ``codes[i]``, ``carry`` seeding group 0. Every key is hashed once and
+    ``np.add.at`` adds in row order, so each counter gets the same
+    additions in the same order as ``CountMinSketch.update_batch`` over
+    its group's rows alone: the blobs are byte-identical."""
+    d, w = proto.depth, proto.width
+    buckets = proto._bucket_rows(keys)  # (depth, rows)
+    step = max(1, _SCATTER_CELLS // (d * w))
+    for g0 in range(0, n_groups, step):
+        g1 = min(g0 + step, n_groups)
+        sel = (slice(None) if g1 - g0 == n_groups
+               else (codes >= g0) & (codes < g1))
+        counts = np.zeros((g1 - g0, d, w))
+        if g0 == 0 and carry is not None:
+            counts[0] = carry
+        cells = ((codes[sel] - g0) * d + np.arange(d)[:, None]) * w \
+            + buckets[:, sel]
+        np.add.at(counts.reshape(-1), cells.ravel(),
+                  np.broadcast_to(incs[sel], cells.shape).ravel())
+        yield g0, counts
+
+
+def _cms_blobs(slim: DataFrame, gnames: list[str], spec: SketchSpec,
+               open_groups: bool) -> DataFrame:
+    """The batched CMS build over a ``_slim`` frame: one ``mapInArrow``
+    pass, per Arrow batch one group id per row and one ``_cms_scatter``
+    for all its groups. ``open_groups=False``: one partial blob per group
+    per batch (sketch_by_key's map-side combine). ``open_groups=True``:
+    the input is clustered and sorted by group, so a group's rows are one
+    run that may continue into the next batch; a group is emitted once the
+    next one starts, and only the still-open group's counters carry over.
+    """
+    proto = spec.make()
+    header = proto.serialize()[:-proto.counts.nbytes]
+    names = gnames + ["sketch"]
+
+    def emit(cols, counts) -> pa.RecordBatch:
+        blobs = pa.array([header + c.tobytes() for c in counts], pa.binary())
+        return pa.RecordBatch.from_arrays(cols + [blobs], names=names)
+
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        head = carry = None  # the open group: key columns, counters
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            gcols = [rb.column(c) for c in gnames]
+            if head is not None:
+                gcols = [pa.concat_arrays([h, c])
+                         for h, c in zip(head, gcols)]
+            codes = _group_codes(gcols)
+            if open_groups:
+                new = np.r_[True, codes[1:] != codes[:-1]]
+                codes, first = np.cumsum(new) - 1, np.flatnonzero(new)
+            else:
+                first = np.unique(codes, return_index=True)[1]
+            keys = rb.column("__key").to_numpy(
+                zero_copy_only=False).astype(np.int64, copy=False)
+            incs = (rb.column("__val").to_numpy(zero_copy_only=False)
+                    if "__val" in rb.schema.names else np.ones(rb.num_rows))
+            n = len(first)
+            for g0, counts in _cms_scatter(proto, keys, incs,
+                                           codes[len(codes) - rb.num_rows:],
+                                           n, carry):
+                if open_groups and g0 + len(counts) == n:
+                    head = [c.take([first[-1]]) for c in gcols]
+                    carry, counts = counts[-1].copy(), counts[:-1]
+                if len(counts):
+                    rows = first[g0:g0 + len(counts)]
+                    yield emit([c.take(rows) for c in gcols], counts)
+        if head is not None:
+            yield emit(head, carry[None])
+
+    return slim.mapInArrow(build, schema=_sketch_schema(slim, gnames))
+
+
 def _merged_partials(slim: DataFrame, gnames: list[str], spec: SketchSpec,
                      n_salt: int = 1) -> DataFrame:
     """sketch_by_key's body over a ``_slim`` frame: per-batch partials,
@@ -427,8 +534,10 @@ def _merged_partials(slim: DataFrame, gnames: list[str], spec: SketchSpec,
                              _build_blob(spec, sub)))
             yield pd.DataFrame(rows, columns=gnames + ["sketch"])
 
-    partials = slim.mapInPandas(build_partials,
-                                schema=_sketch_schema(slim, gnames))
+    partials = (_cms_blobs(slim, gnames, spec, open_groups=False)
+                if spec.kind == "cms" else
+                slim.mapInPandas(build_partials,
+                                 schema=_sketch_schema(slim, gnames)))
     if n_salt > 1 and spec.kind in _EXACT_MERGE_KINDS:
         # The salt level exists to cap per-task merge fan-in (partial
         # blob count per group <= #partials partitions). For kinds whose
@@ -457,7 +566,15 @@ def _merged_partials(slim: DataFrame, gnames: list[str], spec: SketchSpec,
 
 def _per_group(slim: DataFrame, gnames: list[str],
                spec: SketchSpec) -> DataFrame:
-    """sketch_per_group's body over a ``_slim`` frame."""
+    """sketch_per_group's body over a ``_slim`` frame. CMS: the group
+    Exchange + Sort that ``applyInPandas`` would plan, then the batched
+    build; other kinds: one ``_build_blob`` per group in ``applyInPandas``.
+    """
+    if spec.kind == "cms":
+        return _cms_blobs(slim.repartition(*gnames)
+                          .sortWithinPartitions(*gnames), gnames, spec,
+                          open_groups=True)
+
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         return _head_row(pdf, gnames, _build_blob(spec, pdf))
 
@@ -487,7 +604,7 @@ def sketch_by_key(df: DataFrame, group_cols: list[str], spec: SketchSpec,
 def sketch_per_group(df: DataFrame, group_cols: list[str], spec: SketchSpec,
                      key_col: str | None = None, value_col: str | None = None,
                      key_expr: F.Column | None = None) -> DataFrame:
-    """One sketch per group via direct ``groupBy().applyInPandas`` — the
+    """One sketch per group, each group built whole in one task — the
 
     right shape for MANY small groups (per-user / per-item profiles, the
     CosineCM ``groupBy(user).applyInPandas(build_cms)`` mapping). The
@@ -495,6 +612,10 @@ def sketch_per_group(df: DataFrame, group_cols: list[str], spec: SketchSpec,
     streams, where per-partition partials + salted merges pay off; here a
     group fits one task, so partials would only multiply blob traffic.
     The same JVM pre-aggregation still applies before the group shuffle.
+    CMS specs then take one batched Python pass per Arrow batch over the
+    group-sorted rows (memory: one batch's groups plus the one group
+    still open across batches); other kinds one ``applyInPandas`` call
+    per group.
     """
     gnames = list(group_cols)
     return _per_group(_slim(df, gnames, spec, key_col, value_col, key_expr),
@@ -520,7 +641,8 @@ def sketch_per_group_skewed(df: DataFrame, group_cols: list[str],
     group keys — e.g. the head tokens by count, which profile pipelines
     have already computed) through the partitioned-partials path and the
     tail through the one-task-per-group path: the straggler disappears
-    while partial traffic stays |heavy| x partitions x sketch_bytes.
+    while partial traffic stays |heavy| x partitions x sketch_bytes. For
+    CMS both branches run the batched kernel (``_cms_blobs``).
     For linear sketches (CMS/HLL/Bloom) the merged result is
     byte-identical to the single-task build; rank sketches
     (t-digest/KLL) agree within their documented merge error.

@@ -3,10 +3,13 @@
 The reference answers CMS queries single-JVM (DoubleCountMinSketch.get /
 cosine, CosineCM.userSimilarity); here every query is a DataFrame op over a
 sketch table produced by ``sketch_by_key``, and each query shape has one
-kernel: ``_probe`` (point queries: probes join their sketch, each blob is
-deserialized once per task and answers its probes in one vectorised call),
+kernel: ``_probe`` (point queries: with join columns each group's probes
+are collected into one list row that joins its sketch, so each blob crosses
+to Python once and answers its probes in one vectorised call; without, the
+sketch table is broadcast and each blob deserialized once per task),
 ``_blob_pairs`` (a function of two sketches per row; each caller brings its
-own join), ``_sketch_map`` (a function of one sketch per row) and
+own join, and the self-joins broadcast their ``b`` side explicitly),
+``_sketch_map`` (a function of one sketch per row) and
 ``_rank_window_check`` (quantile estimates against exact rank windows).
 
 ``cms_*_oracle_sql`` builders emit DuckDB SQL computing the *mathematical
@@ -42,17 +45,26 @@ def _probe(sketch_df: DataFrame, probe_df: DataFrame, probe_key: F.Column,
            deserializer, method: str) -> DataFrame:
     """The probe kernel under cms_point_lookup and bloom_contains_lookup:
     probe rows + ``deserializer(blob).<method>(keys)`` as ``out_col``
-    (``out_type`` 'double' | 'boolean'). Each distinct blob is deserialized
-    once per task and answers all its probes in one vectorised call."""
+    (``out_type`` 'double' | 'boolean'), one vectorised call per blob.
+
+    With ``join_cols`` each join key's probe rows are collected into one
+    list row (``collect_list`` of a struct, so NULLs stay aligned), that
+    row joins its sketch once, and the blob crosses to Python once per
+    group instead of once per probe row; probes whose group has no
+    sketch are dropped. Without, the (small) sketch table is broadcast-
+    cross-joined and each distinct blob is deserialized once per task.
+    """
     probe = probe_df.withColumn("__key", probe_key.cast("long"))
-    joined = (probe.join(sketch_df, join_cols) if join_cols
-              else probe.crossJoin(F.broadcast(sketch_df)))
+    dtype = {"double": np.float64, "boolean": np.bool_}[out_type]
+    if join_cols:
+        return _grouped_probe(sketch_df, probe, join_cols, out_col, dtype,
+                              deserializer, method)
+    joined = probe.crossJoin(F.broadcast(sketch_df))
     out_fields = [f for f in joined.schema.fields
                   if f.name not in ("__key", "sketch")]
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in out_fields) + f", {out_col} {out_type}"
     names = [f.name for f in out_fields]
-    dtype = {"double": np.float64, "boolean": np.bool_}[out_type]
 
     def lookup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cache: dict[bytes, object] = {}
@@ -71,6 +83,53 @@ def _probe(sketch_df: DataFrame, probe_df: DataFrame, probe_key: F.Column,
             yield out
 
     return joined.mapInPandas(lookup, schema=schema)
+
+
+def _grouped_probe(sketch_df: DataFrame, probe: DataFrame,
+                   join_cols: list[str], out_col: str, dtype, deserializer,
+                   method: str) -> DataFrame:
+    """``_probe`` with ``join_cols``: one list row per join key joins its
+    sketch; Python answers each row's keys in one call and flattens the
+    lists back to probe rows (join columns, probe columns, sketch-table
+    columns, ``out_col`` — the column order of a plain join)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import (BooleanType, DoubleType, StructField,
+                                   StructType)
+
+    rest = [c for c in probe.columns if c not in join_cols]
+    grouped = probe.groupBy(*join_cols).agg(
+        F.collect_list(F.struct(*rest)).alias("__rows"))
+    joined = grouped.join(sketch_df, join_cols)
+    extra = [f for f in sketch_df.schema.fields
+             if f.name not in join_cols and f.name != "sketch"]
+    fields = ([joined.schema[c] for c in join_cols]
+              + [probe.schema[c] for c in rest if c != "__key"] + extra
+              + [StructField(out_col, DoubleType() if dtype == np.float64
+                             else BooleanType())])
+
+    def lookup(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            lists = rb.column("__rows")
+            rows = lists.flatten()
+            keys = rows.field("__key").to_numpy(zero_copy_only=False)
+            offs = lists.offsets.to_numpy()
+            offs = offs - offs[0]
+            res = np.empty(len(rows), dtype=dtype)
+            for j, blob in enumerate(rb.column("sketch").to_pylist()):
+                lo, hi = offs[j], offs[j + 1]
+                res[lo:hi] = getattr(deserializer(blob), method)(keys[lo:hi])
+            parent = pc.list_parent_indices(lists)
+            cols = ([rb.column(c).take(parent) for c in join_cols]
+                    + [rows.field(c) for c in rest if c != "__key"]
+                    + [rb.column(f.name).take(parent) for f in extra]
+                    + [pa.array(res)])
+            yield pa.RecordBatch.from_arrays(
+                cols, names=[f.name for f in fields])
+
+    return joined.mapInArrow(lookup, schema=StructType(fields))
 
 
 def cms_point_lookup(sketch_df: DataFrame, probe_df: DataFrame,
@@ -180,7 +239,8 @@ def cms_pairwise(sketch_df: DataFrame, group_col: str,
         return (CountMinSketch.cosine(ca, cb) if kind == "cosine"
                 else ca.inner_product(cb),)
 
-    return _blob_pairs(a.join(b, F.col("a") < F.col("b")), ["a", "b"], value,
+    return _blob_pairs(a.join(F.broadcast(b), F.col("a") < F.col("b")),
+                       ["a", "b"], value,
                        f"a {gtype}, b {gtype}, {out_col} double")
 
 
@@ -272,14 +332,17 @@ def cms_topk_cosine(sketch_df: DataFrame, group_col: str, k: int = 10,
     # tiny packed table to 1-2 partitions, which would serialize the
     # n_blocks^2 BLAS tile tasks; only block payloads (bounded:
     # n_items x depth x width x 4B) move, never tiles. Scale-adaptive by
-    # construction — n_blocks already tracks cluster parallelism.
+    # construction — n_blocks already tracks cluster parallelism. The
+    # broadcast side is pinned to pb: adaptive execution may otherwise
+    # broadcast pa and stream pb's 1-2 partitions, running every tile in
+    # one or two tasks.
     pa = (packed.select(F.col("__blk").alias("__ba"),
                         F.col("ids").alias("__ia"),
                         F.col("mat").alias("__ma"), "depth", "width")
           .repartition(n_blocks))
     pb = packed.select(F.col("__blk").alias("__bb"),
                        F.col("ids").alias("__ib"), F.col("mat").alias("__mb"))
-    pairs = pa.crossJoin(pb)
+    pairs = pa.crossJoin(F.broadcast(pb))
 
     cand_schema = f"item {gtype}, neighbor {gtype}, cms_cosine double"
 
@@ -890,7 +953,8 @@ def countsketch_pairwise(sketch_df: DataFrame, group_col: str,
         return (CountSketch.deserialize(sa).inner_product(
             CountSketch.deserialize(sb)),)
 
-    return _blob_pairs(a.join(b, F.col("a") < F.col("b")), ["a", "b"], inner,
+    return _blob_pairs(a.join(F.broadcast(b), F.col("a") < F.col("b")),
+                       ["a", "b"], inner,
                        f"a {gtype}, b {gtype}, {out_col} double")
 
 

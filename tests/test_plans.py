@@ -81,9 +81,10 @@ def test_sketch_build_is_arrow_batched(spark):
     sk = sketch_by_key(toks.withColumn("g", F.lit(0)), ["g"],
                        cms_spec(0.01, 0.05), key_col="token")
     plan = plan_of(sk)
-    # two Python stages exactly: partial build (mapInPandas) + merge
-    # (applyInPandas) — and key hashing stays JVM-side (xxhash64)
-    assert plan.count("MapInPandas") == 1
+    # two Python stages exactly: partial build (the batched CMS kernel's
+    # mapInArrow) + merge (applyInPandas) — and key hashing stays
+    # JVM-side (xxhash64)
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
     assert "FlatMapGroupsInPandas" in plan
     assert "xxhash64" in plan
 
@@ -118,9 +119,9 @@ def test_sketch_preagg_happens_before_python(spark):
                        cms_spec(0.01, 0.05), key_col="token")
     plan = plan_of(sk)
     # the partial/final HashAggregate pair (JVM pre-agg) must appear
-    # below (= printed after) MapInPandas in the tree
-    assert "MapInPandas" in plan and "HashAggregate" in plan
-    first_python = plan.index("MapInPandas")
+    # below (= printed after) the partial build's MapInArrow in the tree
+    assert "MapInArrow" in plan and "HashAggregate" in plan
+    first_python = plan.index("MapInArrow")
     assert "HashAggregate" in plan[first_python:], \
         "JVM pre-aggregation missing under the Python stage"
 

@@ -402,3 +402,72 @@ def test_cms_recommender_chain_caches_nothing_else(spark):
     assert len(set(jsc.getPersistentRDDs().keys()) - before) <= 1
     profiles.unpersist(blocking=True)
     assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
+def _zipf_ratings(spark, n_users=60, n_items=40, seed=9):
+    """Distinct (user, item, pref) rows: lognormal ratings per user, Zipf
+    item popularity, integer prefs in 1..5 (the benchmark's shape)."""
+    rng = np.random.default_rng(seed)
+    p = np.arange(1, n_items + 1, dtype=float) ** -1.1
+    rows = set()
+    for u in range(n_users):
+        n = int(np.clip(np.rint(rng.lognormal(2.0, 0.7)), 2, 30))
+        for i in rng.choice(n_items, size=n, p=p / p.sum()):
+            rows.add((u * 3 + 11, int(i) + 5))
+    return _prefs(spark, [(u, i, float(rng.integers(1, 6)))
+                          for u, i in sorted(rows)])
+
+
+def test_user_cms_profiles_plan_has_one_python_operator(spark):
+    # one Python pass builds every profile: no partial blobs, no merge
+    import re
+
+    from mahout_spark.operators.recommender import user_cms_profiles
+
+    plan = (user_cms_profiles(_zipf_ratings(spark))._jdf.queryExecution()
+            .executedPlan().toString())
+    ops = re.findall(r"\b(?:MapInPandas|MapInArrow|FlatMapGroupsInPandas|"
+                     r"ArrowEvalPython|BatchEvalPython)\b", plan)
+    assert len(ops) == 1, plan
+
+
+def test_recommend_cms_sends_each_rated_user_to_python_once(spark,
+                                                            monkeypatch):
+    # the point-lookup UDF sees one row per rated user (its probe keys as
+    # a list, its sketch once), not one row per rated (user, item)
+    from mahout_spark.operators.recommender import (recommend_cms,
+                                                    user_cms_profiles)
+
+    prefs = _zipf_ratings(spark)
+    profiles = user_cms_profiles(prefs, depth=3, width=64, seed=2)
+    nb = cms_user_similarity(profiles, top_n=5)
+    seen = spark.sparkContext.accumulator(0)
+
+    def counting(method):
+        def wrapped(self, f, *args, **kwargs):
+            if f.__name__ == "lookup":
+                def f2(batches, f=f, acc=seen):
+                    def counted():
+                        for b in batches:
+                            acc.add(len(b))
+                            yield b
+                    return f(counted())
+                return method(self, f2, *args, **kwargs)
+            return method(self, f, *args, **kwargs)
+        return wrapped
+
+    frame = type(prefs)  # the session's concrete DataFrame class
+    for name in ("mapInPandas", "mapInArrow"):
+        monkeypatch.setattr(frame, name, counting(getattr(frame, name)))
+    recs = recommend_cms(prefs, profiles, nb, top_n=3, min_evidence=1)
+    monkeypatch.undo()
+    spark.sparkContext.setJobGroup("recommend_cms-probe-rows",
+                                   "count the rows sent to the lookup UDF")
+    try:
+        assert recs.collect()
+    finally:
+        spark.sparkContext.setJobGroup(None, None)
+    n_users = prefs.select("user_id").distinct().count()
+    assert n_users < prefs.count()
+    assert seen.value == n_users
+    profiles.unpersist()

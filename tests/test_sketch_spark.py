@@ -380,8 +380,11 @@ class TestOtherSketches:
         assert n_missing == 0
 
 
-@pytest.mark.parametrize("case", ["key_col", "value_col", "key_expr"])
-def test_sketch_per_group_skewed_byte_identical(spark, case):
+@pytest.mark.parametrize("case,family", [
+    pytest.param(c, f, id=c if f == "fast" else f"{c}-{f}")
+    for f in ("fast", "parity", "xxh")
+    for c in ("key_col", "value_col", "key_expr")])
+def test_sketch_per_group_skewed_byte_identical(spark, case, family):
     # the skew-hybrid (heavy groups via partitioned partials) must produce
     # byte-identical CMS blobs to the one-task-per-group build and to the
     # two-phase build: one prologue (key hash, value cast, preagg) feeds
@@ -398,7 +401,7 @@ def test_sketch_per_group_skewed_byte_identical(spark, case):
         rows.append((g, int(rng.integers(0, 500)),
                      float(rng.integers(1, 6))))
     df = spark.createDataFrame(rows, ["grp", "key", "w"]).repartition(8)
-    spec = cms_spec_shape(4, 256, seed=3)
+    spec = cms_spec_shape(4, 256, seed=3, family=family)
     heavy = spark.createDataFrame([("g0",)], ["grp"])
     kw = {"key_col": dict(key_col="key"),
           "value_col": dict(key_col="key", value_col="w"),
@@ -427,3 +430,128 @@ def test_builders_reject_a_missing_key(spark, builder):
             else [])
     with pytest.raises(ValueError, match="cms needs key_col"):
         getattr(agg, builder)(df, ["grp"], cms_spec(), *args)
+
+
+@pytest.fixture
+def tiny_arrow_batches(spark):
+    # 7-row Arrow batches: groups straddle batch boundaries, and list
+    # columns arrive as slices whose offsets do not start at zero
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    yield
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("family", ["fast", "parity", "xxh"])
+@pytest.mark.parametrize("case", ["key_col", "value_col", "key_expr"])
+def test_batched_cms_build_equals_numpy_replay(spark, tiny_arrow_batches,
+                                               case, family):
+    # the batched build (one scatter-add per Arrow batch for all groups)
+    # against CountMinSketch.update_batch per group over the same slim
+    # rows, for both builders: a NULL group key gets its own sketch, and
+    # the group key may span two columns
+    from mahout_spark.core.cms import CountMinSketch
+    from mahout_spark.sketch.agg import _slim, sketch_per_group
+
+    rng = np.random.default_rng(11)
+    rows = [(None if i % 17 == 0 else f"g{i % 5}",
+             None if i % 23 == 0 else int(i % 3),
+             int(rng.integers(0, 300)), float(rng.integers(1, 6)))
+            for i in range(600)]
+    df = spark.createDataFrame(
+        rows, "grp string, sub long, key long, w double").repartition(3)
+    spec = cms_spec_shape(3, 128, seed=5, family=family)
+    kw = {"key_col": dict(key_col="key"),
+          "value_col": dict(key_col="key", value_col="w"),
+          "key_expr": dict(key_expr=md5_long60(F.col("key").cast("string")))
+          }[case]
+    gcols = ["grp", "sub"]
+    slim = _slim(df, gcols, spec, kw.get("key_col"), kw.get("value_col"),
+                 kw.get("key_expr")).toPandas()
+    want = {}
+    for g, sub in slim.groupby(gcols, dropna=False, sort=False):
+        s = CountMinSketch(3, 128, seed=5, family=family)
+        # integer weights: every counter sum is exact in any row order
+        s.update_batch(sub["__key"].to_numpy(dtype=np.int64),
+                       sub["__val"].to_numpy(dtype=np.float64))
+        want[tuple(None if v != v else v for v in g)] = s.serialize()
+    assert (None, 0) in want and ("g1", None) in want
+
+    def blobs(out):
+        got = [((r["grp"], r["sub"]), bytes(r["sketch"]))
+               for r in out.collect()]
+        assert len(got) == len(dict(got))  # one row per group
+        return dict(got)
+
+    assert blobs(sketch_per_group(df, gcols, spec, **kw)) == want
+    assert blobs(sketch_by_key(df, gcols, spec, **kw)) == want
+
+
+@pytest.mark.parametrize("kind", ["cms", "bloom"])
+def test_grouped_probe_equals_numpy_replay(spark, tiny_arrow_batches, kind):
+    # _probe with join_cols: duplicate probe keys in one group, extra probe
+    # columns (NULLs included) and sketch-table columns come back aligned;
+    # probes of a group without a sketch, or with a NULL group, are dropped
+    from mahout_spark.core.bloom import BloomFilter
+    from mahout_spark.core.cms import CountMinSketch
+
+    rng = np.random.default_rng(3)
+    sketches = {}
+    for g in ("a", "b", "c"):
+        keys = rng.integers(0, 50, size=40)
+        if kind == "cms":
+            s = CountMinSketch(3, 16, seed=2)
+            s.update_batch(keys, rng.integers(1, 4, size=40).astype(float))
+        else:
+            s = BloomFilter.from_capacity(40, 0.3, seed=2)
+            s.add_batch(keys)
+        sketches[g] = s
+    sk = spark.createDataFrame(
+        [(g, f"tag-{g}", bytearray(s.serialize()))
+         for g, s in sketches.items()],
+        "grp string, label string, sketch binary")
+    probes = [(("a", "b", "c", "z", None)[i % 5], int(rng.integers(0, 60)),
+               None if i % 4 == 0 else f"x{i}", float(i))
+              for i in range(60)]
+    probes += [("b", 7, "dup", 1.0)] * 3
+    probe_df = spark.createDataFrame(
+        probes, "grp string, k long, note string, v double").repartition(4)
+    lookup, method = ((cms_point_lookup, "point_batch") if kind == "cms"
+                      else (bloom_contains_lookup, "contains_batch"))
+    out = lookup(sk, probe_df, F.col("k"), join_cols=["grp"],
+                 out_col="est")
+    assert out.columns == ["grp", "k", "note", "v", "label", "est"]
+    want = sorted(
+        ((g, k, note, v, f"tag-{g}",
+          getattr(sketches[g], method)(np.array([k]))[0].item())
+         for g, k, note, v in probes if g in sketches), key=repr)
+    got = sorted((tuple(r) for r in out.collect()), key=repr)
+    assert got == want
+
+
+def _final_plan(df) -> list[str]:
+    """The lines of the adaptive plan Spark actually ran for ``df``."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    return plan.split("== Initial Plan ==")[0].splitlines()
+
+
+@pytest.mark.parametrize("query", ["cms_pairwise", "countsketch_pairwise"])
+def test_pairwise_self_join_broadcasts_the_b_side(spark, query):
+    # the pair self-join's build side is pinned: adaptive execution may
+    # otherwise broadcast either copy from one run to the next
+    spec = (cms_spec_shape(3, 64, seed=1) if query == "cms_pairwise"
+            else countsketch_spec_shape(3, 64, seed=1))
+    df = spark.createDataFrame([(f"g{i % 6}", i % 40) for i in range(300)],
+                               ["grp", "key"])
+    sk = sketch_by_key(df, ["grp"], spec, key_col="key")
+    pairs = {"cms_pairwise": cms_pairwise,
+             "countsketch_pairwise": countsketch_pairwise}[query](sk, "grp")
+    plan = _final_plan(pairs)
+    join = [ln for ln in plan if "BroadcastNestedLoopJoin" in ln]
+    assert len(join) == 1 and "BuildRight" in join[0], plan
+    # the broadcast exchange carries the b copy (group b, blob __sb)
+    bx = next(i for i, ln in enumerate(plan) if "BroadcastExchange" in ln)
+    assert " AS b#" in plan[bx + 1] and " AS __sb#" in plan[bx + 1], plan
